@@ -9,12 +9,12 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Cpus.fromEnv(default = 4)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.extensions",
         "graft.iceberg.connector.GraftSparkExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -61,8 +61,7 @@ object Bench {
     // from the artifact alone). Additions only; the timed protocol and
     // every existing key are unchanged.
     val par = spark.sparkContext.defaultParallelism
-    val cpusN = cpus.trim.toIntOption.getOrElse(par) // local[*] etc.
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","passes":$passes,"timing":"min","cpus":$cpusN,"parallelism":$par,"queries":$qs,"errors":$errs,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","passes":$passes,"timing":"min","cpus":$cpus,"parallelism":$par,"queries":$qs,"errors":$errs,"sf":"$sfDir"}"""
     println(line)
     // The driver captures only a truncated tail of this process's stdout
     // (BENCH_r11/r12 lost per-query times for q1–q43 three rounds

@@ -57,13 +57,13 @@ object BenchScale {
     // the sf0.1 bench is overhead-bound, so THIS is the surface where
     // 8-vs-32-core ratios can actually separate; `cpus` rides every
     // output line so the scaling harness can verify the setting took
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    cpusLabel = cpus.trim.toIntOption.getOrElse(32).toString
+    val cpus = Cpus.fromEnv(default = 32)
+    cpusLabel = cpus.toString
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.extensions",
         "graft.iceberg.connector.GraftSparkExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

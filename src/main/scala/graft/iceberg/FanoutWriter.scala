@@ -47,17 +47,30 @@ object SerializableHadoopConf {
     * same entries — and it changes when any property VALUE changes, not
     * just the count (the r20 cache invalidated on `size()` alone, which
     * shipped stale bytes to tasks if a caller mutated an existing key
-    * after first use; ADVICE r20). */
+    * after first use; ADVICE r20). Each entry's (key, value) hash pair
+    * runs through the Murmur3 `fmix64` finalizer before the sum: a plain
+    * linear sum does not change when two properties swap values. */
   private def fingerprint(conf: Configuration): Long = {
     var h = conf.size().toLong << 32
     val it = conf.iterator()
     while (it.hasNext) {
       val e = it.next()
-      // sum of per-entry hashes: iteration order of the underlying
+      // sum of mixed per-entry hashes: iteration order of the underlying
       // Properties map must not matter
-      h += e.getKey.hashCode.toLong * 31L + e.getValue.hashCode.toLong
+      h += fmix64(e.getKey.hashCode.toLong << 32 |
+        (e.getValue.hashCode & 0xffffffffL))
     }
     h
+  }
+
+  /** Murmur3's 64-bit finalizer. */
+  private def fmix64(k0: Long): Long = {
+    var k = k0
+    k ^= k >>> 33
+    k *= 0xff51afd7ed558ccdL
+    k ^= k >>> 33
+    k *= 0xc4ceb9fe1a85ec53L
+    k ^ (k >>> 33)
   }
 
   private def bytesFor(conf: Configuration): Array[Byte] = {

@@ -385,14 +385,29 @@ object IcebergWriter {
         "total-data-files" -> f.toString)
     }.getOrElse(Map.empty)
 
+  private val NoTotals: Totals = (0L, 0L, 0L)
+
   private def addedTotals(added: Seq[AddedDataFile]): Totals =
     (added.map(_.rows).sum, added.map(_.bytes).sum, added.size.toLong)
 
-  private def plus(a: Totals, b: Totals): Totals =
-    (a._1 + b._1, a._2 + b._2, a._3 + b._3)
+  private def fileTotals(files: Seq[DataFileEntry]): Totals =
+    (files.map(_.recordCount).sum, files.map(_.fileSizeInBytes).sum, files.size.toLong)
 
-  private def minus(a: Totals, b: Totals): Totals =
-    (a._1 - b._1, a._2 - b._2, a._3 - b._3)
+  /** A commit's totals rule maps the base's totals (zeros when there is
+    * no base snapshot; None when the base omits them) to the new
+    * snapshot's. */
+  private type TotalsRule = Option[Totals] => Option[Totals]
+
+  /** The base's totals minus `removed` plus `added`. */
+  private def adjust(removed: Totals = NoTotals,
+                     added: Totals = NoTotals): TotalsRule =
+    _.map { case (r, b, f) =>
+      (r - removed._1 + added._1, b - removed._2 + added._2,
+        f - removed._3 + added._3)
+    }
+
+  /** The new snapshot's files are the whole table. */
+  private def reset(to: Totals): TotalsRule = _ => Some(to)
 
   private def writeAvro(fsPath: Path, conf: org.apache.hadoop.conf.Configuration,
                         schema: Schema, records: Seq[GenericRecord]): Long = {
@@ -406,16 +421,6 @@ object IcebergWriter {
     fs.getFileStatus(fsPath).getLen
   }
 
-  /** Seed an EMPTY Iceberg table document at `dir` (v1.metadata.json, no
-    * snapshot) — the pathless-catalog twin of CREATE TABLE, for tables
-    * addressed by location (vector indexes, streaming sinks, bench
-    * scratch). Goes through the path's Hadoop FileSystem, so any object
-    * store works (a java.nio write would silently only work for `file:`).
-    *
-    * REFUSES a dir that already holds table metadata: reads resolve the
-    * HIGHEST vN.metadata.json, so overwriting v1 under a surviving v2+
-    * would leave the stale version live and a later commit would silently
-    * merge old and new contents. Rebuild = drop (delete the dir) first. */
   /** The Hadoop conf a write runs under: the committer's when one is
     * supplied — REST committers carry the catalog's vended per-table
     * storage credentials, so the write DATA PLANE (parquet data files,
@@ -433,6 +438,16 @@ object IcebergWriter {
   private def vendedOf(committer: Option[TableCommitter]): Map[String, String] =
     committer.map(_.vended).getOrElse(Map.empty)
 
+  /** Seed an EMPTY Iceberg table document at `dir` (v1.metadata.json, no
+    * snapshot) — the pathless-catalog twin of CREATE TABLE, for tables
+    * addressed by location (vector indexes, streaming sinks, bench
+    * scratch). Goes through the path's Hadoop FileSystem, so any object
+    * store works (a java.nio write would silently only work for `file:`).
+    *
+    * REFUSES a dir that already holds table metadata: reads resolve the
+    * HIGHEST vN.metadata.json, so overwriting v1 under a surviving v2+
+    * would leave the stale version live and a later commit would silently
+    * merge old and new contents. Rebuild = drop (delete the dir) first. */
   def seedTable(spark: SparkSession, dir: String,
       schema: org.apache.spark.sql.types.StructType,
       partitionCols: Seq[(String, String)] = Nil,
@@ -497,53 +512,18 @@ object IcebergWriter {
       spark: SparkSession, tableDir: String, added: Seq[AddedDataFile],
       removedPred: DataFileEntry => Boolean,
       committer: Option[TableCommitter], branch: String): Long = {
-    val conf = writeConf(spark, committer)
-    val cmtr = committer.getOrElse(new FsCommitter(tableDir, conf))
-    val meta = cmtr.currentMetadata()
-    val (baseSnap, parent, refExpected) = branchBase(meta, branch)
-    val snapId = meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1L
-    val table = {
-      val t = IcebergTable.fromMetadata(tableDir, conf, meta, vendedOf(committer))
-      if (branch == "main" || !meta.refs.contains(branch)) t
-      else t.atSnapshot(baseSnap.get.snapshotId)
-    }
-    val candidates = if (baseSnap.isEmpty) Nil else table.planFiles()
-    val evolved = candidates.filter(_.specId != meta.defaultSpecId)
+    val b = begin(writeConf(spark, committer), tableDir, committer, branch)
+    val candidates = if (b.baseSnap.isEmpty) Nil else b.table.planFiles()
+    val evolved = candidates.filter(_.specId != b.meta.defaultSpecId)
     require(evolved.isEmpty,
       s"partition overwrite on a table with ${evolved.size} live files " +
         "under an older partition spec: their tuples are not comparable " +
         "with the current spec's — compact/rewrite the table first")
     val removedFiles = candidates.filter(removedPred)
-    val removed = removedFiles.map(_.filePath).toSet
-    val u = uniq()
-    val prev: Seq[ManifestFile] = baseSnap.toSeq.flatMap(s =>
-      ManifestIO.readManifestList(
-        resolveAgainst(meta, tableDir, s.manifestList), conf))
-    val keptPrior: Seq[GenericRecord] = prev.zipWithIndex.flatMap { case (m, i) =>
-      val mPath = resolveAgainst(meta, tableDir, m.path)
-      if (m.content == 1)
-        Some(mlRec(mPath, m.length, m.content, m.sequenceNumber,
-          m.addedRowsCount, m.partitionSpecId, m.partitions))
-      else filterManifest(mPath, conf, removed,
-        new Path(s"$tableDir/metadata/m-s$snapId-$u-r$i.avro")) match {
-        case None =>
-          Some(mlRec(mPath, m.length, m.content, m.sequenceNumber,
-            m.addedRowsCount, m.partitionSpecId, m.partitions))
-        case Some((_, 0L, _, _)) => None
-        case Some((newPath, rows, len, _)) =>
-          Some(mlRec(newPath, len, m.content, m.sequenceNumber, Some(rows),
-            m.partitionSpecId, m.partitions))
-      }
-    }
-    val newMl = writeNewManifest(conf, tableDir, meta, snapId, added)
-    val removedStats = removedFiles.foldLeft((0L, 0L, 0L)) { (t, f) =>
-      plus(t, (f.recordCount, f.fileSizeInBytes, 1L)) }
-    val totals = baseSnap.flatMap(parsedTotals)
-      .map(t => plus(minus(t, removedStats), addedTotals(added)))
-    commitSnapshot(cmtr, snapId, parent, keptPrior ++ newMl,
-      Map("operation" -> "overwrite"), ref = branch,
-      refExpected = refExpected, totals = totals)
-    snapId
+    val removed = withoutFiles(removedFiles.map(_.filePath).toSet)
+    produce(b, SnapshotUpdate("overwrite", b.newManifest(added).toSeq,
+      carry = m => if (m.content == 1) Keep else removed,
+      totals = adjust(fileTotals(removedFiles), addedTotals(added))))
   }
 
   /** SQL `INSERT OVERWRITE t PARTITION (p = v, …)` (static mode), and the
@@ -563,9 +543,8 @@ object IcebergWriter {
                      committer: Option[TableCommitter] = None,
                      branch: String = "main"): Long = {
     import org.apache.spark.sql.sources._
-    val conf = writeConf(spark, committer)
-    val cmtr = committer.getOrElse(new FsCommitter(tableDir, conf))
-    val meta = cmtr.currentMetadata()
+    val b = begin(writeConf(spark, committer), tableDir, committer, branch)
+    val meta = b.meta
     val identityFields: Map[String, String] = {
       val idToName = meta.fieldIds.map(_.swap)
       meta.partitionSpec.filter(_.transform == "identity")
@@ -592,7 +571,7 @@ object IcebergWriter {
     }
     val added = writeDataFiles(
       df.select(meta.schema.fieldNames.map(col).toSeq: _*),
-      s"$tableDir/data/ow-${uniq()}", meta, conf)
+      s"$tableDir/data/ow-${b.u}", meta, b.conf)
     commitPartitionOverwrite(spark, tableDir, added,
       f => filters.forall(eval(_, f.partition)), committer, branch)
   }
@@ -612,10 +591,8 @@ object IcebergWriter {
       branch: String = "main"): Long = {
     if (added.isEmpty) return -1L
     val touched: Set[Seq[Any]] = added.flatMap(_.partition).toSet
-    val conf = writeConf(spark, committer)
-    val cmtr = committer.getOrElse(new FsCommitter(tableDir, conf))
-    val meta = cmtr.currentMetadata()
-    val specNames = meta.partitionSpec.map(_.name)
+    val specNames = begin(writeConf(spark, committer), tableDir, committer,
+      branch).meta.partitionSpec.map(_.name)
     val pred: DataFileEntry => Boolean =
       if (specNames.isEmpty) _ => true
       else f => {
@@ -662,18 +639,25 @@ object IcebergWriter {
     // the physical column does, and the read coalesce prefers it.
     val lineage = wantsLineage(t.metadata)
     val df0 = t.toDF(spark, keepLineage = lineage)
-    val df1 =
-      if (zorderCols.nonEmpty) ZOrder.cluster(df0, zorderCols, n)
-      else if (sortCols.nonEmpty)
-        df0.repartitionByRange(n, sortCols.map(col): _*)
-          .sortWithinPartitions(sortCols.map(col): _*)
-      else df0.repartition(n)
-    val df = if (lineage) stampLineageField(df1) else df1
+    val df = clusterRewrite(df0, n, sortCols, zorderCols, lineage)
     // spec operation `replace`: same rows, different files — readers that
     // interpret operations (the changelog above all) must see compaction
     // as data movement, not as an overwrite's delete+insert churn
     commit(spark, tableDir, df, carryPrior = false,
       Map("operation" -> "replace"), committer)
+  }
+
+  /** A rewrite's rows clustered into `n` files (z-order, range-sorted, or
+    * plain), with the lineage columns stamped when the table keeps them. */
+  private def clusterRewrite(df: DataFrame, n: Int, sortCols: Seq[String],
+      zorderCols: Seq[String], lineage: Boolean): DataFrame = {
+    val clustered =
+      if (zorderCols.nonEmpty) ZOrder.cluster(df, zorderCols, n)
+      else if (sortCols.nonEmpty)
+        df.repartitionByRange(n, sortCols.map(col): _*)
+          .sortWithinPartitions(sortCols.map(col): _*)
+      else df.repartition(n)
+    if (lineage) stampLineageField(clustered) else clustered
   }
 
   /** True when commits to this table assign v3 row lineage (declared or
@@ -717,11 +701,8 @@ object IcebergWriter {
                committer: Option[TableCommitter] = None,
                branch: String = "main"): Long = {
     require(paths.nonEmpty, "addFiles: no files given")
-    val conf = writeConf(spark, committer)
-    val cmtr = committer.getOrElse(new FsCommitter(tableDir, conf))
-    val meta = cmtr.currentMetadata()
-    val snapId = meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1L
-    val (baseSnap, parent, refExpected) = branchBase(meta, branch)
+    val b = begin(writeConf(spark, committer), tableDir, committer, branch)
+    val (conf, meta) = (b.conf, b.meta)
     val added: Seq[AddedDataFile] = paths.map { p =>
       val path = new Path(p)
       val len = path.getFileSystem(conf).getFileStatus(path).getLen
@@ -798,21 +779,8 @@ object IcebergWriter {
       AddedDataFile(path.toString, rows, len, stats, partition = None,
         fileFormat = fmt)
     }
-    val newMl = writeNewManifest(conf, tableDir, meta, snapId, added)
-    val prev: Seq[ManifestFile] = baseSnap.toSeq.flatMap(s =>
-      ManifestIO.readManifestList(
-        resolveAgainst(meta, tableDir, s.manifestList), conf))
-    val listRecs = prev.map(m =>
-      mlRec(resolveAgainst(meta, tableDir, m.path), m.length, m.content,
-        m.sequenceNumber, m.addedRowsCount, m.partitionSpecId, m.partitions)) ++
-      newMl
-    val totals = baseSnap match {
-      case None => Some(addedTotals(added))
-      case Some(s) => parsedTotals(s).map(plus(_, addedTotals(added)))
-    }
-    commitSnapshot(cmtr, snapId, parent, listRecs, Map("operation" -> "append"),
-      ref = branch, refExpected = refExpected, totals = totals)
-    snapId
+    produce(b, SnapshotUpdate("append", b.newManifest(added).toSeq,
+      totals = adjust(added = addedTotals(added))))
   }
 
   /** Filters expressible as EQUALITY-DELETE tuples: a boolean tree of
@@ -872,20 +840,15 @@ object IcebergWriter {
                   committer: Option[TableCommitter] = None,
                   branch: String = "main"): Long = {
     import org.apache.spark.sql.sources.AlwaysTrue
-    val conf = writeConf(spark, committer)
-    val cmtr = committer.getOrElse(new FsCommitter(tableDir, conf))
-    val meta = cmtr.currentMetadata()
-    val snapId = meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1L
     // write-audit-publish: the delete stacks on (and moves) the targeted
     // branch's head, exactly like an append — main stays untouched
-    val (baseSnap, parent, refExpected) = branchBase(meta, branch)
+    val b = begin(writeConf(spark, committer), tableDir, committer, branch)
+    val meta = b.meta
     val effective = filters.filterNot(_.isInstanceOf[AlwaysTrue])
-    if (effective.isEmpty) { // DELETE FROM t → truncate
-      commitSnapshot(cmtr, snapId, parent, Nil, Map("operation" -> "delete"),
-        ref = branch, refExpected = refExpected, totals = Some((0L, 0L, 0L)))
-      return snapId
-    }
-    if (baseSnap.isEmpty) return -1L // empty table: no-op
+    if (effective.isEmpty) // DELETE FROM t → truncate
+      return produce(b, SnapshotUpdate("delete", truncate = true,
+        totals = reset(NoTotals)))
+    if (b.baseSnap.isEmpty) return -1L // empty table: no-op
 
     val (cols, tuples) = equalityTuples(meta.schema, effective).getOrElse(
       throw new UnsupportedOperationException(
@@ -901,48 +864,21 @@ object IcebergWriter {
     val rows: java.util.List[org.apache.spark.sql.Row] =
       scala.jdk.CollectionConverters.SeqHasAsJava(
         tuples.map(t => org.apache.spark.sql.Row.fromSeq(t))).asJava
-    val u = uniq()
-    val delDir = s"$tableDir/data/del-s$snapId-$u"
+    val delDir = s"$tableDir/data/del-s${b.snapId}-${b.u}"
     spark.createDataFrame(rows, subSchema).coalesce(1)
       .write.mode("overwrite").parquet(delDir)
-    val fs = new Path(delDir).getFileSystem(conf)
+    val fs = new Path(delDir).getFileSystem(b.conf)
     val delFile = fs.listStatus(new Path(delDir))
       .filter(_.getPath.getName.endsWith(".parquet")).head
 
-    // 2. delete manifest (data_file.content = 2 → equality deletes)
-    val dfSchema = deleteManifestSchema.getField("data_file").schema
-    val d = new GenericData.Record(dfSchema)
-    d.put("content", 2)
-    d.put("file_path", delFile.getPath.toString)
-    d.put("file_format", "PARQUET")
-    d.put("record_count", tuples.size.toLong)
-    d.put("file_size_in_bytes", delFile.getLen)
-    val ids = new java.util.ArrayList[Integer](cols.size)
-    cols.foreach(c => ids.add(meta.fieldIds(c)))
-    d.put("equality_ids", ids)
-    val e = new GenericData.Record(deleteManifestSchema)
-    e.put("status", 1)
-    e.put("data_file", d)
-    val manifestPath = new Path(s"$tableDir/metadata/m-del-s$snapId-$u.avro")
-    val manifestLen = writeAvro(manifestPath, conf, deleteManifestSchema,
-      Seq(e.asInstanceOf[GenericRecord]))
-
-    // 3. manifest list: the branch head's manifests + the delete manifest
-    // (content 1)
-    val prev: Seq[ManifestFile] = baseSnap.toSeq.flatMap(s =>
-      ManifestIO.readManifestList(
-        resolveAgainst(meta, tableDir, s.manifestList), conf))
-    val listRecs = prev.map(m =>
-      mlRec(resolveAgainst(meta, tableDir, m.path), m.length, m.content,
-        m.sequenceNumber, m.addedRowsCount, m.partitionSpecId, m.partitions)) :+
-      mlRec(manifestPath.toString, manifestLen, 1, Some(snapId),
-        Some(tuples.size.toLong), meta.defaultSpecId, Nil)
-    // equality deletes leave the DATA files untouched (merge-on-read):
-    // the spec's totals count data-file records, so they carry over
-    commitSnapshot(cmtr, snapId, parent, listRecs, Map("operation" -> "delete"),
-      ref = branch, refExpected = refExpected,
-      totals = baseSnap.flatMap(parsedTotals))
-    snapId
+    // 2. the branch head's manifests + a delete manifest (content 1)
+    // holding the equality-delete entry (data_file.content 2). Equality
+    // deletes leave the DATA files untouched (merge-on-read): the spec's
+    // totals count data-file records, so they carry over
+    val entry = deleteEntryRecord(delFile.getPath.toString, "PARQUET",
+      tuples.size.toLong, delFile.getLen, equalityIds = cols.map(meta.fieldIds))
+    produce(b, SnapshotUpdate("delete",
+      Seq(b.deleteManifest("del", Seq(entry), tuples.size.toLong))))
   }
 
   /** Commit a copy-on-write FILE SWAP as a new snapshot: `removed` data
@@ -1010,21 +946,16 @@ object IcebergWriter {
                      * the retry contract. None skips the check (callers
                      * that pin `expectedSnapshotId` instead). */
                    plannedDeleteManifests: Option[Set[String]] = None): Long = {
-    val cmtr = committer.getOrElse(new FsCommitter(tableDir, conf))
-    val meta = cmtr.currentMetadata()
+    val b = begin(conf, tableDir, committer)
     expectedSnapshotId.foreach { e =>
-      val cur = meta.currentSnapshotId.filter(_ != -1L)
-      if (!cur.contains(e))
+      if (!b.parent.contains(e))
         throw new CommitConflictException(
           s"copy-on-write swap planned against snapshot $e but the table " +
-            s"is now at ${cur.getOrElse("<empty>")} — a concurrent commit " +
+            s"is now at ${b.parent.getOrElse("<empty>")} — a concurrent commit " +
             "landed between planning and commit; replan against fresh " +
             "metadata and retry")
     }
-    val snapId = meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1L
-    val prev: Seq[ManifestFile] = meta.currentSnapshot.toSeq.flatMap(s =>
-      ManifestIO.readManifestList(
-        resolveAgainst(meta, tableDir, s.manifestList), conf))
+    val deleteManifests = b.prior.filter(_.content == 1)
     // A delete manifest the planner did not see (for plan-aware callers,
     // anything outside plannedDeleteManifests; for a clean-at-plan scan
     // that is EVERY delete manifest) means a concurrent row-level delete
@@ -1033,62 +964,36 @@ object IcebergWriter {
     // the debt and takes the delete-applying read). Callers with no
     // planned set keep the programmer-error require below.
     plannedDeleteManifests.foreach { known =>
-      val unseen = prev.filter(_.content == 1)
-        .map(m => resolveAgainst(meta, tableDir, m.path))
-        .filterNot(known.contains)
+      val unseen = deleteManifests.map(_.path).filterNot(known.contains)
       if (unseen.nonEmpty) throw new CommitConflictException(
         s"copy-on-write swap aborted: ${unseen.size} delete manifest(s) " +
           "landed after planning (concurrent row-level delete); rewritten " +
           "files would escape them by sequence number — replan against " +
           "fresh metadata and retry")
     }
-    require(carryDeleteManifests || !prev.exists(_.content == 1),
+    require(carryDeleteManifests || deleteManifests.isEmpty,
       "replaceFiles on a table with delete manifests: deletes must be " +
         "materialized (compact) before a copy-on-write rewrite, or rewritten " +
         "rows would resurrect them")
 
-    val u = uniq()
-    var droppedTotal = 0L
-    val keptPrior: Seq[GenericRecord] = prev.zipWithIndex.flatMap { case (m, i) =>
-      val mPath = resolveAgainst(meta, tableDir, m.path)
-      if (m.content == 1) // delete manifests pass through (carry mode only)
-        Some(mlRec(mPath, m.length, m.content, m.sequenceNumber,
-          m.addedRowsCount, m.partitionSpecId, m.partitions))
-      else filterManifest(mPath, conf, removed,
-        new Path(s"$tableDir/metadata/m-s$snapId-$u-r$i.avro")) match {
-        case None => // untouched: re-record as-is
-          Some(mlRec(mPath, m.length, m.content, m.sequenceNumber,
-            m.addedRowsCount, m.partitionSpecId, m.partitions))
-        case Some((_, 0L, _, d)) => // every file removed: drop the manifest
-          droppedTotal += d; None
-        case Some((newPath, rows, len, d)) =>
-          droppedTotal += d
-          Some(mlRec(newPath, len, m.content, m.sequenceNumber, Some(rows),
-            m.partitionSpecId, m.partitions))
-      }
-    }
-    // Commit-time revalidation (independent of expectedSnapshotId): every
-    // planned-removed file must still be live in the CURRENT snapshot,
-    // exactly once. A concurrent rewrite that already moved one of them
-    // means our replacement files would duplicate (or resurrect) its rows.
-    if (droppedTotal != removed.size)
-      throw new CommitConflictException(
-        s"copy-on-write swap aborted: $droppedTotal of ${removed.size} " +
-          "planned files are live in the current snapshot — a concurrent " +
-          "rewrite moved the rest; replan against fresh metadata and retry")
-
-    val newMl = writeNewManifest(conf, tableDir, meta, snapId, added)
     val removedKnown = removedEntries.filter(e => removed.contains(e.filePath))
-    val totals =
-      if (removedKnown.map(_.filePath).toSet != removed) None // partial info
-      else meta.currentSnapshot.flatMap(parsedTotals).map { t =>
-        val gone = removedKnown.foldLeft((0L, 0L, 0L)) { (a, f) =>
-          plus(a, (f.recordCount, f.fileSizeInBytes, 1L)) }
-        plus(minus(t, gone), addedTotals(added))
-      }
-    commitSnapshot(cmtr, snapId, meta.currentSnapshotId.filter(_ != -1L),
-      keptPrior ++ newMl, Map("operation" -> operation), totals = totals)
-    snapId
+    val dataPolicy = withoutFiles(removed)
+    produce(b, SnapshotUpdate(operation, b.newManifest(added).toSeq,
+      // delete manifests pass through (carry mode only); untouched data
+      // manifests are re-recorded as-is
+      carry = m => if (m.content == 1) Keep else dataPolicy,
+      // Commit-time revalidation (independent of expectedSnapshotId):
+      // every planned-removed file must still be live in the CURRENT
+      // snapshot, exactly once. A concurrent rewrite that already moved
+      // one of them means our replacement files would duplicate (or
+      // resurrect) its rows.
+      expectDropped = Some((removed.size, n =>
+        s"copy-on-write swap aborted: $n of ${removed.size} " +
+          "planned files are live in the current snapshot — a concurrent " +
+          "rewrite moved the rest; replan against fresh metadata and retry")),
+      totals =
+        if (removedKnown.map(_.filePath).toSet != removed) _ => None // partial info
+        else adjust(fileTotals(removedKnown), addedTotals(added))))
   }
 
   /** PARTIAL compaction: rewrite only the data files a predicate's
@@ -1113,9 +1018,8 @@ object IcebergWriter {
     require(sortCols.isEmpty || zorderCols.isEmpty,
       "choose sort OR zorder clustering, not both")
     val conf = writeConf(spark, committer)
-    val cmtr = committer.getOrElse(new FsCommitter(tableDir, conf))
-    val meta = cmtr.currentMetadata()
-    val t = IcebergTable.fromMetadata(tableDir, conf, meta, vendedOf(committer))
+    val b = begin(conf, tableDir, committer)
+    val (meta, t) = (b.meta, b.table)
     val files = t.planFiles(filters)
     if (files.size < 2) return (meta.currentSnapshotId.getOrElse(0L), 0)
     val bytes = files.map(_.fileSizeInBytes).sum
@@ -1131,38 +1035,31 @@ object IcebergWriter {
     val lineage = wantsLineage(meta)
     val df0 = t.toDF(spark, Nil, precomputed = Some(files),
       keepLineage = lineage)
-    val df1 =
-      if (zorderCols.nonEmpty) ZOrder.cluster(df0, zorderCols, n)
-      else if (sortCols.nonEmpty)
-        df0.repartitionByRange(n, sortCols.map(col): _*)
-          .sortWithinPartitions(sortCols.map(col): _*)
-      else df0.repartition(n)
-    val df = if (lineage) stampLineageField(df1) else df1
-    val snapId0 = meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1L
-    val added = writeDataFiles(df, s"$tableDir/data/cw$snapId0-${uniq()}",
+    val df = clusterRewrite(df0, n, sortCols, zorderCols, lineage)
+    val added = writeDataFiles(df, s"$tableDir/data/cw${b.snapId}-${b.u}",
       meta, conf)
     val snapId = replaceFiles(conf, tableDir,
-      removed = files.map(_.filePath).toSet, added, Some(cmtr),
+      removed = files.map(_.filePath).toSet, added, Some(b.cmtr),
       removedEntries = files, operation = "replace",
       // abort (CommitConflictException) if anything — a merge-on-read
       // DELETE, a rival compaction — landed since the plan above
-      expectedSnapshotId = meta.currentSnapshotId.filter(_ != -1L),
+      expectedSnapshotId = b.parent,
       // the read above applied this snapshot's deletes, so carrying the
       // delete manifests through is sound (and pinned by the base check)
       carryDeleteManifests = t.hasDeletes)
     (snapId, files.size)
   }
 
-  /** Write the manifest for one commit's added files and return its
-    * manifest-list record — shared by append/overwrite commits and
-    * copy-on-write file swaps. Everything comes from the tasks' commit
-    * messages: exact partition tuples (also rolled up into the
-    * manifest-list partition summaries that drive manifest-level pruning)
-    * and footer column stats. The ONLY driver file I/O is a per-file
-    * footer fallback when a task message arrived without stats. */
+  /** Write the manifest `m-s<id>-<u>.avro` for one commit's added files
+    * and return its manifest-list record (None when nothing was added).
+    * Everything comes from the tasks' commit messages: exact partition
+    * tuples (also rolled up into the manifest-list partition summaries
+    * that drive manifest-level pruning) and footer column stats. The ONLY
+    * driver file I/O is a per-file footer fallback when a task message
+    * arrived without stats. */
   private def writeNewManifest(
       conf: org.apache.hadoop.conf.Configuration, tableDir: String,
-      meta: TableMetadata, snapId: Long,
+      meta: TableMetadata, snapId: Long, u: String,
       added: Seq[AddedDataFile]): Option[GenericRecord] = {
     if (added.isEmpty) return None
     val spec = meta.partitionSpec
@@ -1213,7 +1110,7 @@ object IcebergWriter {
       e.put("data_file", d)
       e.asInstanceOf[GenericRecord]
     }
-    val manifestPath = new Path(s"$tableDir/metadata/m-s$snapId-${uniq()}.avro")
+    val manifestPath = new Path(s"$tableDir/metadata/m-s$snapId-$u.avro")
     val manifestLen = writeAvro(manifestPath, conf, mSchema, entries)
 
     // manifest-list partition summaries — only when EVERY file carries a
@@ -1252,12 +1149,6 @@ object IcebergWriter {
     }
   }
 
-  /** Distributed data-file write: every partition of `df` streams through
-    * a [[FanoutWriterFactory]] task writer (partition-transform fanout,
-    * field-id-stamped parquet, own-footer stats), and only the small
-    * [[AddedDataFile]] bookkeeping returns to the driver. This is the
-    * DataFrame-API twin of the DSv2 `ReplaceData` write path — one write
-    * kernel, two entry points. */
   /** The table's data-file format (Iceberg `write.format-default`):
     * PARQUET (our native default), ORC, or AVRO — the full spec format
     * matrix on the write side (the reference's entire engine is
@@ -1336,6 +1227,12 @@ object IcebergWriter {
     v
   }
 
+  /** Distributed data-file write: every partition of `df` streams through
+    * a [[FanoutWriterFactory]] task writer (partition-transform fanout,
+    * field-id-stamped parquet, own-footer stats), and only the small
+    * [[AddedDataFile]] bookkeeping returns to the driver. This is the
+    * DataFrame-API twin of the DSv2 `ReplaceData` write path — one write
+    * kernel, two entry points. */
   private[graft] def writeDataFiles(
       df: DataFrame, writeDir: String, meta: TableMetadata,
       conf: org.apache.hadoop.conf.Configuration,
@@ -1389,41 +1286,6 @@ object IcebergWriter {
     }.collect().toSeq.flatMap(_.files)
   }
 
-  /** Filter `removed` file paths out of one manifest, preserving its
-    * embedded writer schema byte-for-byte semantics. Returns None when no
-    * entry matched (keep the original), else Some((newPath, liveRows,
-    * newLength)) — liveRows 0 means the manifest lost every file. */
-  /** Returns None when the manifest references none of `removed`;
-    * otherwise (newPath, liveRows, length, droppedCount) — droppedCount
-    * feeds [[replaceFiles]]' commit-time check that every planned
-    * removal is still live. */
-  private def filterManifest(
-      path: String, conf: org.apache.hadoop.conf.Configuration,
-      removed: Set[String], outPath: Path): Option[(String, Long, Long, Int)] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val in = fs.open(p)
-    val bytes = try in.readAllBytes() finally in.close()
-    val reader = new org.apache.avro.file.DataFileReader[GenericRecord](
-      new org.apache.avro.file.SeekableByteArrayInput(bytes),
-      new org.apache.avro.generic.GenericDatumReader[GenericRecord]())
-    val (kept, dropped) = try {
-      val all = Vector.newBuilder[GenericRecord]
-      while (reader.hasNext) all += reader.next()
-      all.result().partition { r =>
-        val df = r.get("data_file").asInstanceOf[GenericRecord]
-        !removed.contains(String.valueOf(df.get("file_path")))
-      }
-    } finally reader.close()
-    if (dropped.isEmpty) return None
-    val liveRows = kept.map(_.get("data_file").asInstanceOf[GenericRecord]
-      .get("record_count").asInstanceOf[java.lang.Number].longValue).sum
-    if (kept.isEmpty) return Some((path, 0L, 0L, dropped.size))
-    val schema = kept.head.getSchema
-    val len = writeAvro(outPath, conf, schema, kept)
-    Some((outPath.toString, liveRows, len, dropped.size))
-  }
-
   private val deleteManifestSchema = new Schema.Parser().parse(
     """{"type":"record","name":"manifest_entry","fields":[
       |{"name":"status","type":"int"},
@@ -1444,19 +1306,27 @@ object IcebergWriter {
   /** One delete-manifest entry (status = added). `dv` carries the v3
     * fields (referenced data file, blob offset, blob size) of a
     * deletion-vector entry; None = a v2 parquet position-delete file.
-    * All four delete writers build through here so a schema change
-    * cannot drift between them. */
+    * Non-empty `equalityIds` make it an EQUALITY delete file instead.
+    * Every delete writer builds through here so a schema change cannot
+    * drift between them. */
   private def deleteEntryRecord(
       filePath: String, fileFormat: String, recordCount: Long,
       fileSizeInBytes: Long,
-      dv: Option[(String, Long, Long)] = None): GenericRecord = {
+      dv: Option[(String, Long, Long)] = None,
+      equalityIds: Seq[Int] = Nil): GenericRecord = {
     val dfSchema = deleteManifestSchema.getField("data_file").schema
     val d = new GenericData.Record(dfSchema)
-    d.put("content", 1) // POSITION_DELETES (parquet or DV flavor)
+    // 1 = POSITION_DELETES (parquet or DV flavor), 2 = EQUALITY_DELETES
+    d.put("content", if (equalityIds.isEmpty) 1 else 2)
     d.put("file_path", filePath)
     d.put("file_format", fileFormat)
     d.put("record_count", recordCount)
     d.put("file_size_in_bytes", fileSizeInBytes)
+    if (equalityIds.nonEmpty) {
+      val ids = new java.util.ArrayList[Integer](equalityIds.size)
+      equalityIds.foreach(id => ids.add(id))
+      d.put("equality_ids", ids)
+    }
     dv.foreach { case (ref, off, size) =>
       d.put("referenced_data_file", ref)
       d.put("content_offset", off)
@@ -1476,28 +1346,306 @@ object IcebergWriter {
     * absent, so racing first-writes still conflict cleanly. Tags are
     * immutable pointers: writing to one is refused. */
   private def branchBase(meta: TableMetadata, branch: String)
-      : (Option[IcebergSnapshot], Option[Long], Option[Option[Long]]) = {
+      : (Option[IcebergSnapshot], Option[Long], Option[Long]) = {
     require(!meta.tagRefs.contains(branch),
       s"ref '$branch' is a tag — tags are immutable; write to a branch")
     val mainHead = meta.currentSnapshotId.filter(_ != -1L)
-    if (branch == "main") (meta.currentSnapshot, mainHead, Some(mainHead))
+    if (branch == "main") (meta.currentSnapshot, mainHead, mainHead)
     else meta.refs.get(branch) match {
-      case Some(id) =>
-        (meta.snapshots.find(_.snapshotId == id), Some(id), Some(Some(id)))
-      case None => (meta.currentSnapshot, mainHead, Some(None))
+      case Some(id) => (meta.snapshots.find(_.snapshotId == id), Some(id), Some(id))
+      case None => (meta.currentSnapshot, mainHead, None)
     }
   }
 
+  /** The supplied committer, else the filesystem warehouse's. */
+  private def committerOf(conf: org.apache.hadoop.conf.Configuration,
+      tableDir: String, committer: Option[TableCommitter]): TableCommitter =
+    committer.getOrElse(new FsCommitter(tableDir, conf))
+
+  /** What one commit builds on, read once: the committer, the conf its
+    * files are written with, the table metadata, the target branch's
+    * base ([[branchBase]]), the next snapshot id and the writer-unique
+    * file-name suffix every file of the commit shares. The base's
+    * manifests and the branch-pinned table load on first use. */
+  private final class CommitBase(
+      val conf: org.apache.hadoop.conf.Configuration, val tableDir: String,
+      val cmtr: TableCommitter, val branch: String, vended: Map[String, String]) {
+    val meta: TableMetadata = cmtr.currentMetadata()
+    val (baseSnap, parent, expectedHead) = branchBase(meta, branch)
+    val snapId: Long = meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1L
+    val u: String = uniq()
+
+    def resolve(path: String): String = resolveAgainst(meta, tableDir, path)
+
+    /** `s`'s manifests, paths resolved against the table dir. */
+    def manifests(s: IcebergSnapshot): Seq[ManifestFile] =
+      ManifestIO.readManifestList(resolve(s.manifestList), conf)
+        .map(m => m.copy(path = resolve(m.path)))
+
+    lazy val prior: Seq[ManifestFile] = baseSnap.toSeq.flatMap(manifests)
+
+    /** The table as of the base: a write to an existing branch plans
+      * against the branch head's file set, every other write against
+      * main's. */
+    lazy val table: IcebergTable = {
+      val t = IcebergTable.fromMetadata(tableDir, conf, meta, vended)
+      if (branch == "main" || !meta.refs.contains(branch)) t
+      else t.atSnapshot(baseSnap.get.snapshotId)
+    }
+
+    def newManifest(added: Seq[AddedDataFile],
+                    fileMeta: TableMetadata = meta): Option[GenericRecord] =
+      writeNewManifest(conf, tableDir, fileMeta, snapId, u, added)
+
+    /** Write the delete manifest `m-<kind>-s<id>-<u>.avro`. */
+    def deleteManifest(kind: String, entries: Seq[GenericRecord],
+                       rows: Long): GenericRecord =
+      writeDeleteManifest(conf, new Path(s"$tableDir/metadata/m-$kind-s$snapId-$u.avro"),
+        entries, snapId, rows, meta.defaultSpecId)
+  }
+
+  private def begin(conf: org.apache.hadoop.conf.Configuration,
+                    tableDir: String, committer: Option[TableCommitter],
+                    branch: String = "main"): CommitBase =
+    new CommitBase(conf, tableDir, committerOf(conf, tableDir, committer),
+      branch, vendedOf(committer))
+
+  /** What one manifest of the base becomes in the new snapshot. */
+  private sealed trait Carry
+  private case object Keep extends Carry
+  private case object Drop extends Carry
+  /** Rewritten without the entries whose `data_file` record `drops`
+    * matches, as `<prefix>-s<id>-<u>-<tag><i>.avro` (`i` = the manifest's
+    * position in the base's list). */
+  private final case class Without(drops: GenericRecord => Boolean,
+                                   tag: String, prefix: String = "m") extends Carry
+
+  /** Data-manifest policy: drop the data files stored at `paths`. */
+  private def withoutFiles(paths: Set[String]): Carry =
+    if (paths.isEmpty) Keep
+    else Without(df => paths.contains(String.valueOf(df.get("file_path"))), "r")
+
+  /** Delete-manifest policy of a deletion-vector commit: drop (a) the DV
+    * entries a new vector supersedes (those referencing a path in
+    * `targets`; its positions were absorbed) and (b) the v2
+    * position-delete files in `dropV2` (see [[dvConvergedV2Drops]]). Both
+    * sets hold normalized paths; `normResolve` normalizes a stored one. */
+  private def withoutSuperseded(targets: Set[String], dropV2: Set[String],
+      normResolve: String => String, prefix: String = "m"): Carry =
+    if (targets.isEmpty) Keep
+    else Without({ df =>
+      val isDv = Option(df.get("file_format"))
+        .exists(f => String.valueOf(f).equalsIgnoreCase("puffin")) ||
+        df.getSchema.getField("content_offset") != null &&
+          df.get("content_offset") != null
+      val ref = Option(df.getSchema.getField("referenced_data_file"))
+        .flatMap(_ => Option(df.get("referenced_data_file")))
+        .map(String.valueOf(_))
+      val superseded = isDv && ref.exists(r => targets.contains(normResolve(r)))
+      val converged = !isDv && df.get("content") == 1 &&
+        dropV2.contains(normResolve(String.valueOf(df.get("file_path"))))
+      superseded || converged
+    }, "d", prefix)
+
+  /** Rewrite manifest `m` without the entries `drops` matches, under its
+    * own embedded writer schema — so column bounds, null counts, and any
+    * foreign-writer fields this library does not model all survive (a
+    * typed round-trip through [[DataFileEntry]] would silently shed
+    * them). None when nothing matched (carry `m` as-is); otherwise the
+    * rewritten manifest's list record (None when no entry is left) and
+    * the number of entries dropped. */
+  private def rewriteManifest(conf: org.apache.hadoop.conf.Configuration,
+      m: ManifestFile, drops: GenericRecord => Boolean,
+      out: Path): Option[(Option[GenericRecord], Int)] = {
+    def dataFile(r: GenericRecord) = r.get("data_file").asInstanceOf[GenericRecord]
+    val (schema, entries) = ManifestIO.readRecords(m.path, conf)
+    val (dropped, kept) = entries.partition(r => drops(dataFile(r)))
+    if (dropped.isEmpty) None
+    else if (kept.isEmpty) Some((None, dropped.size))
+    else {
+      val liveRows = kept.map(r => dataFile(r).get("record_count")
+        .asInstanceOf[java.lang.Number].longValue).sum
+      val len = writeAvro(out, conf, schema, kept)
+      Some((Some(mlRec(m.copy(path = out.toString, length = len,
+        addedRowsCount = Some(liveRows)))), dropped.size))
+    }
+  }
+
+  /** One snapshot-producing change: everything a mutation decides. */
+  private final case class SnapshotUpdate(
+      /** spec snapshot `operation` */
+      operation: String,
+      /** manifest-list records of the manifests this commit wrote */
+      added: Seq[GenericRecord] = Nil,
+      /** the base's manifests are not carried (nor read) */
+      truncate: Boolean = false,
+      /** policy per carried manifest of the base */
+      carry: ManifestFile => Carry = _ => Keep,
+      /** entries the rewrites must drop, and the conflict message for
+        * any other count — a planned removal that is no longer live */
+      expectDropped: Option[(Int, Int => String)] = None,
+      totals: TotalsRule = identity,
+      /** extra summary entries (may override `operation`) */
+      summary: Map[String, String] = Map.empty,
+      /** update actions that must land atomically with the snapshot */
+      extraUpdates: Seq[JsonNode] = Nil)
+
+  /** The one snapshot producer: apply `up`'s manifest policies to the
+    * base, write the manifest list, then commit the snapshot as the REST
+    * spec's (requirements, updates) pair through the table's committer:
+    * `add-snapshot` + `set-snapshot-ref <ref>`, guarded by
+    * `assert-ref-snapshot-id <ref>` on the base head — optimistic
+    * concurrency on every transport (filesystem create-new or REST
+    * POST). A write-audit-publish write targets a staging branch instead
+    * of `main`, leaving `main` (and its snapshot-log) untouched. Returns
+    * the new snapshot id. */
+  private def produce(b: CommitBase, up: SnapshotUpdate): Long = {
+    val snapId = b.snapId
+    var dropped = 0
+    val carried: Seq[GenericRecord] = if (up.truncate) Nil else b.prior.indices.flatMap { i =>
+      val m = b.prior(i)
+      up.carry(m) match {
+        case Keep => Some(mlRec(m))
+        case Drop => None
+        case Without(drops, tag, prefix) =>
+          val out = new Path(s"${b.tableDir}/metadata/$prefix-s$snapId-${b.u}-$tag$i.avro")
+          rewriteManifest(b.conf, m, drops, out) match {
+            case None => Some(mlRec(m))
+            case Some((rec, n)) => dropped += n; rec
+          }
+      }
+    }
+    up.expectDropped.foreach { case (n, msg) =>
+      if (dropped != n) throw new CommitConflictException(msg(dropped))
+    }
+    val listRecs = carried ++ up.added
+    val committer = b.cmtr
+    val listPath =
+      new Path(s"${committer.tableDir}/metadata/snap-$snapId-${b.u}.avro")
+    writeAvro(listPath, committer.conf, manifestListSchema, listRecs)
+    val mapper = new ObjectMapper()
+    // ONE metadata read serves both the schema-id stamp and the lineage
+    // block below (REST committers pay an HTTP GET per read)
+    val commitMeta = committer.currentMetadata()
+    val snap = mapper.createObjectNode()
+    snap.put("snapshot-id", snapId)
+    b.parent.foreach(p => snap.put("parent-snapshot-id", p))
+    snap.put("timestamp-ms", System.currentTimeMillis)
+    snap.put("manifest-list", listPath.toString)
+    // spec snapshot field `schema-id`: the schema this snapshot's files
+    // were written with — what lets time travel read each snapshot under
+    // its own schema after REPLACE TABLE / evolution reassigns field ids
+    snap.put("schema-id", commitMeta.currentSchemaId)
+    val baseTotals = b.baseSnap match {
+      case None => Some(NoTotals) // first snapshot on this branch line
+      case Some(s) => parsedTotals(s)
+    }
+    val fullSummary = Map("operation" -> up.operation) ++ up.summary ++
+      totalsSummary(up.totals(baseTotals))
+    val sn = snap.putObject("summary")
+    fullSummary.foreach { case (k, v) => sn.put(k, v) }
+    // v3 row lineage (opt-in via `format-version = 3` table property, or
+    // already-stamped v3 metadata): this snapshot's new rows get the id
+    // range [next-row-id, next-row-id + added), recorded as the
+    // snapshot's `first-row-id`, and the table counter advances in the
+    // SAME commit. Added rows = the new data manifests of this commit
+    // (sequence number == this snapshot id; carried manifests keep their
+    // older sequence numbers).
+    //
+    // Rewrites PRESERVE row ids per the spec's rewrite rule:
+    // compaction (compact/compactWhere), the partial-file rewrite of
+    // positionDeleteWhere, AND (since round 14) the DSv2 ReplaceData
+    // path (SQL UPDATE / MERGE / copy-on-write DELETE — `_row_id` rides
+    // Spark's required-metadata-attribute projection into the
+    // replacement files, see RowLevelOps) all materialize each surviving
+    // row's _row_id into the replacement files (the read-side coalesce
+    // prefers the column over first_row_id + pos). The counter still
+    // advances over the rewritten files' assigned ranges — ids are never
+    // reused, some are simply never served.
+    val (lineageUpdates: Seq[JsonNode], lineageReqs: Seq[JsonNode]) = {
+      val meta = commitMeta
+      if (!wantsLineage(meta)) (Nil, Nil)
+      else {
+        val newDataManifests = listRecs.filter(r =>
+          r.get("content").asInstanceOf[Int] == 0 &&
+            Option(r.get("sequence_number")).exists(_ == snapId))
+        // The base the manifest entries ACTUALLY carry, read back from
+        // the just-written manifests (one bounded local read each):
+        // plan-time metadata (which stamped the entries) and this
+        // commit-build read can diverge under a rival commit, and the
+        // snapshot's first-row-id + counter must agree with the entries,
+        // not with whichever metadata happened to be fresh here. With
+        // several new data manifests the bases must form ONE contiguous
+        // range — verified, not assumed: a future commit path writing
+        // two manifests with a gap or overlap would otherwise silently
+        // assign duplicate row-id ranges.
+        val basesAndCounts: Seq[(Long, Long)] = newDataManifests.flatMap { r =>
+          val rows = Option(r.get("added_rows_count"))
+            .map(_.asInstanceOf[Long]).getOrElse(0L)
+          ManifestIO.firstEntryFirstRowId(
+            String.valueOf(r.get("manifest_path")), committer.conf)
+            .map(base => (base, rows))
+        }
+        if (basesAndCounts.size > 1) {
+          val sorted = basesAndCounts.sortBy(_._1)
+          sorted.sliding(2).foreach {
+            case Seq((b1, n1), (b2, _)) => require(b1 + n1 == b2,
+              s"new data manifests carry non-contiguous row-id ranges " +
+                s"(base $b1 + $n1 rows, then base $b2) — the commit " +
+                "would assign overlapping or gapped lineage")
+            case _ => ()
+          }
+        }
+        val manifestBase: Option[Long] =
+          if (basesAndCounts.isEmpty) None
+          else Some(basesAndCounts.map(_._1).min)
+        val firstRowId = manifestBase.getOrElse(meta.nextRowId.getOrElse(0L))
+        snap.put("first-row-id", firstRowId)
+        val added = newDataManifests.iterator
+          .map(r => Option(r.get("added_rows_count"))
+            .map(_.asInstanceOf[Long]).getOrElse(0L))
+          .sum
+        val upds =
+          (if (meta.formatVersion < 3)
+             Seq(MetadataCommit.upgradeFormatVersion(mapper, 3))
+           else Nil) :+
+            MetadataCommit.setNextRowId(mapper, firstRowId + added)
+        // When the manifests carry assigned ranges, the commit must only
+        // land if the table's counter STILL equals their base — the ref
+        // assert alone cannot see a rival commit on another branch
+        // advancing next-row-id (duplicate-range hole). A conflict
+        // surfaces as CommitConflictException; the caller's retry
+        // re-plans and re-writes manifests under the fresh counter.
+        val reqs = manifestBase.toSeq.map(base =>
+          MetadataCommit.assertNextRowId(mapper, base))
+        (upds, reqs)
+      }
+    }
+    committer.commit(
+      MetadataCommit.assertRefSnapshotId(mapper, b.branch, b.expectedHead) +: lineageReqs,
+      Seq(MetadataCommit.addSnapshot(mapper, snap),
+        MetadataCommit.setSnapshotRef(mapper, b.branch, snapId)) ++
+        lineageUpdates ++ up.extraUpdates)
+    snapId
+  }
+
+  /** Write a delete manifest at `path`; returns its manifest-list record. */
+  private def writeDeleteManifest(conf: org.apache.hadoop.conf.Configuration,
+      path: Path, entries: Seq[GenericRecord], snapId: Long, rows: Long,
+      specId: Int): GenericRecord = {
+    val len = writeAvro(path, conf, deleteManifestSchema, entries)
+    mlRec(path.toString, len, 1, Some(snapId), Some(rows), specId, Nil)
+  }
+
+  /** Write `df` as a new snapshot on `branch`: an append (the base's
+    * manifests carried) or, without `carryPrior`, a truncate-and-write. */
   private def commit(spark: SparkSession, tableDir: String, df: DataFrame,
                      carryPrior: Boolean,
                      summary: Map[String, String] = Map.empty,
                      committer: Option[TableCommitter] = None,
                      branch: String = "main"): Long = {
-    val conf = writeConf(spark, committer)
-    val cmtr = committer.getOrElse(new FsCommitter(tableDir, conf))
-    val meta = cmtr.currentMetadata()
-    val snapId = meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1L
-    val (baseSnap, parent, refExpected) = branchBase(meta, branch)
+    val b = begin(writeConf(spark, committer), tableDir, committer, branch)
+    val meta = b.meta
 
     // 1. data files: the fanout task writers cluster rows by transformed
     // partition value, stamp Iceberg field ids into the parquet schema,
@@ -1557,33 +1705,20 @@ object IcebergWriter {
         case _ => (df, None)
       }
     }
-    val added = writeDataFiles(writeDf, s"$tableDir/data/s$snapId-${uniq()}",
-      meta, conf, soId)
+    val added = writeDataFiles(writeDf, s"$tableDir/data/s${b.snapId}-${b.u}",
+      meta, b.conf, soId)
 
-    // 2. manifest (+ partition summaries) from the commit messages
-    val newMl = writeNewManifest(conf, tableDir, meta, snapId, added)
-
-    // 3. manifest list = base snapshot's manifests + the new one
-    // (append) or just the new one (overwrite/truncate); the base is the
-    // targeted branch's head, so branch writes stack on the branch
-    val prev: Seq[ManifestFile] = baseSnap match {
-      case Some(s) if carryPrior => ManifestIO.readManifestList(
-        resolveAgainst(meta, tableDir, s.manifestList), conf)
-      case _ => Nil
-    }
-    val listRecs = prev.map(m =>
-      mlRec(resolveAgainst(meta, tableDir, m.path), m.length, m.content,
-        m.sequenceNumber, m.addedRowsCount, m.partitionSpecId, m.partitions)) ++
-      newMl
-    val totals: Option[Totals] =
-      if (!carryPrior) Some(addedTotals(added)) // truncate: the new files ARE the table
-      else baseSnap match {
-        case None => Some(addedTotals(added)) // first snapshot on this branch line
-        case Some(s) => parsedTotals(s).map(plus(_, addedTotals(added)))
-      }
-    commitSnapshot(cmtr, snapId, parent, listRecs,
-      Map("operation" -> (if (carryPrior) "append" else "overwrite")) ++ summary,
-      ref = branch, refExpected = refExpected, totals = totals)
+    // 2. manifest (+ partition summaries) from the commit messages; the
+    // list carries the base's manifests (append) or nothing (truncate:
+    // the new files ARE the table). The base is the targeted branch's
+    // head, so branch writes stack on the branch
+    val snapId = produce(b, SnapshotUpdate(
+      if (carryPrior) "append" else "overwrite", b.newManifest(added).toSeq,
+      truncate = !carryPrior,
+      totals =
+        if (carryPrior) adjust(added = addedTotals(added))
+        else reset(addedTotals(added)),
+      summary = summary))
     // spec partition-statistics, incremental: previous snapshot's file +
     // this commit's per-partition delta (a follow-up metadata-only
     // commit; no-op unless graft.partition-statistics = true). Main-line
@@ -1598,7 +1733,7 @@ object IcebergWriter {
       // (the caller would retry and double-write). A skipped entry is
       // spec-legal; the partitions table falls back to the manifest
       // recompute and compute_partition_stats repairs the chain.
-      try PartitionStats.maintainOnAppend(spark, cmtr, snapId,
+      try PartitionStats.maintainOnAppend(spark, b.cmtr, snapId,
         added.map(f => (
           specNames.zip(f.partition.getOrElse(Nil)).toMap, f.rows, f.bytes)))
       catch { case e: Exception =>
@@ -1616,6 +1751,10 @@ object IcebergWriter {
     * break sequence gating; relabeling an evolved spec id as 0 would
     * misjudge old-spec partition tuples; dropping summaries would turn
     * manifest pruning off for them. */
+  private def mlRec(m: ManifestFile): GenericRecord =
+    mlRec(m.path, m.length, m.content, m.sequenceNumber, m.addedRowsCount,
+      m.partitionSpecId, m.partitions)
+
   private def mlRec(path: String, length: Long, content: Int, seq: Option[Long],
                     rows: Option[Long], specId: Int,
                     parts: Seq[PartitionSummary]): GenericRecord = {
@@ -1653,140 +1792,11 @@ object IcebergWriter {
   private[graft] def reSequenceManifestList(
       conf: org.apache.hadoop.conf.Configuration, listPath: String,
       newPath: Path, oldSnapId: Long, newSnapId: Long): String = {
-    val recs = ManifestIO.readManifestList(listPath, conf).map { m =>
-      mlRec(m.path, m.length, m.content,
-        m.sequenceNumber.map(s => if (s == oldSnapId) newSnapId else s),
-        m.addedRowsCount, m.partitionSpecId, m.partitions)
-    }
+    val recs = ManifestIO.readManifestList(listPath, conf).map(m => mlRec(
+      m.copy(sequenceNumber = m.sequenceNumber.map(s =>
+        if (s == oldSnapId) newSnapId else s))))
     writeAvro(newPath, conf, manifestListSchema, recs)
     newPath.toString
-  }
-
-  /** Write the manifest list, then commit the snapshot as the REST
-    * spec's (requirements, updates) pair through the table's committer:
-    * `add-snapshot` + `set-snapshot-ref <ref>`, guarded by
-    * `assert-ref-snapshot-id <ref> == refExpected` — optimistic
-    * concurrency on every transport (filesystem create-new or REST
-    * POST). `ref` is usually `main`; a write-audit-publish write targets
-    * a staging branch instead, leaving `main` (and its snapshot-log)
-    * untouched. `refExpected` differs from `parent` exactly when the
-    * branch does not exist yet (expected absent, parent = main's head
-    * the branch forks from). `summary` lands in the snapshot's `summary`
-    * node (spec: must carry `operation`). */
-  private def commitSnapshot(
-      committer: TableCommitter, snapId: Long, parent: Option[Long],
-      listRecs: Seq[GenericRecord],
-      summary: Map[String, String] = Map.empty,
-      ref: String = "main",
-      refExpected: Option[Option[Long]] = None,
-      totals: Option[Totals] = None,
-      /** Additional update actions folded into the SAME commit (e.g. a
-        * ledger property that must land atomically with the snapshot). */
-      extraUpdates: Seq[JsonNode] = Nil): Unit = {
-    val listPath =
-      new Path(s"${committer.tableDir}/metadata/snap-$snapId-${uniq()}.avro")
-    writeAvro(listPath, committer.conf, manifestListSchema, listRecs)
-    val mapper = new ObjectMapper()
-    // ONE metadata read serves both the schema-id stamp and the lineage
-    // block below (REST committers pay an HTTP GET per read)
-    val commitMeta = committer.currentMetadata()
-    val snap = mapper.createObjectNode()
-    snap.put("snapshot-id", snapId)
-    parent.foreach(p => snap.put("parent-snapshot-id", p))
-    snap.put("timestamp-ms", System.currentTimeMillis)
-    snap.put("manifest-list", listPath.toString)
-    // spec snapshot field `schema-id`: the schema this snapshot's files
-    // were written with — what lets time travel read each snapshot under
-    // its own schema after REPLACE TABLE / evolution reassigns field ids
-    snap.put("schema-id", commitMeta.currentSchemaId)
-    val fullSummary = summary ++ totalsSummary(totals)
-    if (fullSummary.nonEmpty) {
-      val sn = snap.putObject("summary")
-      fullSummary.foreach { case (k, v) => sn.put(k, v) }
-    }
-    // v3 row lineage (opt-in via `format-version = 3` table property, or
-    // already-stamped v3 metadata): this snapshot's new rows get the id
-    // range [next-row-id, next-row-id + added), recorded as the
-    // snapshot's `first-row-id`, and the table counter advances in the
-    // SAME commit. Added rows = the new data manifests of this commit
-    // (sequence number == this snapshot id; carried manifests keep their
-    // older sequence numbers).
-    //
-    // Rewrites PRESERVE row ids per the spec's rewrite rule:
-    // compaction (compact/compactWhere), the partial-file rewrite of
-    // positionDeleteWhere, AND (since round 14) the DSv2 ReplaceData
-    // path (SQL UPDATE / MERGE / copy-on-write DELETE — `_row_id` rides
-    // Spark's required-metadata-attribute projection into the
-    // replacement files, see RowLevelOps) all materialize each surviving
-    // row's _row_id into the replacement files (the read-side coalesce
-    // prefers the column over first_row_id + pos). The counter still
-    // advances over the rewritten files' assigned ranges — ids are never
-    // reused, some are simply never served.
-    val (lineageUpdates: Seq[JsonNode], lineageReqs: Seq[JsonNode]) = {
-      val meta = commitMeta
-      if (!wantsLineage(meta)) (Nil, Nil)
-      else {
-        val newDataManifests = listRecs.filter(r =>
-          r.get("content").asInstanceOf[Int] == 0 &&
-            Option(r.get("sequence_number")).exists(_ == snapId))
-        // The base the manifest entries ACTUALLY carry, read back from
-        // the just-written manifests (one bounded local read each):
-        // plan-time metadata (which stamped the entries) and this
-        // commit-build read can diverge under a rival commit, and the
-        // snapshot's first-row-id + counter must agree with the entries,
-        // not with whichever metadata happened to be fresh here. With
-        // several new data manifests the bases must form ONE contiguous
-        // range — verified, not assumed: a future commit path writing
-        // two manifests with a gap or overlap would otherwise silently
-        // assign duplicate row-id ranges.
-        val basesAndCounts: Seq[(Long, Long)] = newDataManifests.flatMap { r =>
-          val rows = Option(r.get("added_rows_count"))
-            .map(_.asInstanceOf[Long]).getOrElse(0L)
-          ManifestIO.firstEntryFirstRowId(
-            String.valueOf(r.get("manifest_path")), committer.conf)
-            .map(b => (b, rows))
-        }
-        if (basesAndCounts.size > 1) {
-          val sorted = basesAndCounts.sortBy(_._1)
-          sorted.sliding(2).foreach {
-            case Seq((b1, n1), (b2, _)) => require(b1 + n1 == b2,
-              s"new data manifests carry non-contiguous row-id ranges " +
-                s"(base $b1 + $n1 rows, then base $b2) — the commit " +
-                "would assign overlapping or gapped lineage")
-            case _ => ()
-          }
-        }
-        val manifestBase: Option[Long] =
-          if (basesAndCounts.isEmpty) None
-          else Some(basesAndCounts.map(_._1).min)
-        val firstRowId = manifestBase.getOrElse(meta.nextRowId.getOrElse(0L))
-        snap.put("first-row-id", firstRowId)
-        val added = newDataManifests.iterator
-          .map(r => Option(r.get("added_rows_count"))
-            .map(_.asInstanceOf[Long]).getOrElse(0L))
-          .sum
-        val upds =
-          (if (meta.formatVersion < 3)
-             Seq(MetadataCommit.upgradeFormatVersion(mapper, 3))
-           else Nil) :+
-            MetadataCommit.setNextRowId(mapper, firstRowId + added)
-        // When the manifests carry assigned ranges, the commit must only
-        // land if the table's counter STILL equals their base — the ref
-        // assert alone cannot see a rival commit on another branch
-        // advancing next-row-id (duplicate-range hole). A conflict
-        // surfaces as CommitConflictException; the caller's retry
-        // re-plans and re-writes manifests under the fresh counter.
-        val reqs = manifestBase.toSeq.map(b =>
-          MetadataCommit.assertNextRowId(mapper, b))
-        (upds, reqs)
-      }
-    }
-    committer.commit(
-      Seq(MetadataCommit.assertRefSnapshotId(mapper, ref,
-        refExpected.getOrElse(parent))) ++ lineageReqs,
-      Seq(MetadataCommit.addSnapshot(mapper, snap),
-        MetadataCommit.setSnapshotRef(mapper, ref, snapId)) ++
-        lineageUpdates ++ extraUpdates)
   }
 
   /** Same relocation rule as IcebergTable.resolve, usable pre-load. */
@@ -1829,22 +1839,14 @@ object IcebergWriter {
       maxPosDeleteFraction: Double = 0.3,
       committer: Option[TableCommitter] = None,
       branch: String = "main"): Long = {
-    val conf = writeConf(spark, committer)
-    val cmtr = committer.getOrElse(new FsCommitter(tableDir, conf))
-    val meta0 = cmtr.currentMetadata()
     // write-audit-publish: plan the matching pass against the BRANCH
     // head's file set (pinned view) and stack the delete snapshot on the
     // branch — a branch-staged delete must see branch-staged inserts, and
     // main must see neither until publish
-    val (baseSnap, parent, refExpected) = branchBase(meta0, branch)
-    if (baseSnap.isEmpty) return -1L
-    val table = {
-      val t = IcebergTable.fromMetadata(tableDir, conf, meta0, vendedOf(committer))
-      if (branch == "main" || !meta0.refs.contains(branch)) t
-      else t.atSnapshot(baseSnap.get.snapshotId)
-    }
+    val b = begin(writeConf(spark, committer), tableDir, committer, branch)
+    if (b.baseSnap.isEmpty) return -1L
+    val (conf, table, snapId, u) = (b.conf, b.table, b.snapId, b.u)
     val meta = table.metadata
-    val snapId = meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1L
 
     val cond = {
       val cols = filters.flatMap(IcebergTable.filterToColumn)
@@ -1938,56 +1940,21 @@ object IcebergWriter {
         else rewrite += f.filePath
       }
 
-      val u = uniq()
-      val dvMode = dvWriteMode(meta)
       // position path representation: v2 parquet by default; v3 deletion
       // vectors when the table opts in (`graft.write.deletes = dv`) —
       // one roaring blob per affected file, encoded in executors,
       // absorbing every older delete position for that file so the prior
       // DV entries it supersedes can drop from the manifests below
-      val posDelMl: Option[GenericRecord] = if (posDel.isEmpty) None
-      else if (dvMode) {
-        val newPos = matched.withColumn("__np",
-            table.normPathExpr(col("file_path")))
-          .filter(col("__np").isInCollection(posDel))
-          .select(col("__np").as("__ref"), col("pos"))
-        val targets: Map[String, Long] = posDel.iterator.map(np =>
-          np -> byNorm(np).sequenceNumber.getOrElse(-1L)).toMap
-        val all = dvAbsorbPositions(spark, table, targets)
-          .map(newPos.unionByName(_)).getOrElse(newPos)
-        val storedByNorm = posDel.iterator.map(np =>
-          np -> byNorm(np).filePath).toMap
-        writeDvManifest(spark, conf, tableDir, meta, snapId, u, all, storedByNorm)
-      } else {
-        val delDir = s"$tableDir/data/del-s$snapId-$u"
-        val pathMeta = new org.apache.spark.sql.types.MetadataBuilder()
-          .putLong("parquet.field.id", PosDelPathId).build()
-        val posMeta = new org.apache.spark.sql.types.MetadataBuilder()
-          .putLong("parquet.field.id", PosDelPosId).build()
-        val keep = matched.withColumn("__np",
-            table.normPathExpr(col("file_path")))
-          .filter(col("__np").isInCollection(posDel))
-          .select(col("file_path").as("file_path", pathMeta),
-            col("pos").as("pos", posMeta))
-        keep.repartition(1).sortWithinPartitions("file_path", "pos")
-          .write.mode("overwrite").parquet(delDir)
-        val fs = new Path(delDir).getFileSystem(conf)
-        val delFiles = fs.listStatus(new Path(delDir))
-          .filter(_.getPath.getName.endsWith(".parquet")).toSeq
-        val delRows = posDel.toSeq.map(np => counts(np)).sum
-        val entries = delFiles.map(st =>
-          deleteEntryRecord(st.getPath.toString, "PARQUET", delRows, st.getLen))
-        val mPath = new Path(s"$tableDir/metadata/m-del-s$snapId-$u.avro")
-        val mLen = writeAvro(mPath, conf, deleteManifestSchema, entries)
-        Some(mlRec(mPath.toString, mLen, 1, Some(snapId), Some(delRows),
-          meta.defaultSpecId, Nil))
-      }
-
-      // v2 debt convergence (DV mode): delete files whose every live
-      // referenced file now carries a DV drop from the manifests below
-      val v2Drops: Set[String] =
-        if (!dvMode || posDel.isEmpty) Set.empty
-        else dvConvergedV2Drops(spark, table, posDel.toSet)
+      val posMatched = matched
+        .withColumn("__np", table.normPathExpr(col("file_path")))
+        .filter(col("__np").isInCollection(posDel))
+      val (posDelMl: Option[GenericRecord], deletes: Carry) =
+        if (posDel.isEmpty) (None, Keep)
+        else if (dvWriteMode(meta)) writeDeletionVectors(spark, b, table,
+          posMatched.select(col("__np").as("__ref"), col("pos")),
+          posDel.iterator.map(np => np -> byNorm(np)).toMap)
+        else (writeMergedPositionDeletes(b, posMatched,
+          posDel.toSeq.map(np => counts(np)).sum), Keep)
 
       // rewrite group: surviving rows through the shared fanout writers —
       // one scan per source format (a mixed parquet+ORC rewrite set
@@ -2039,54 +2006,59 @@ object IcebergWriter {
       }
 
       // one snapshot: the branch head's manifests minus dropped/rewritten
-      // files, plus the rewrite manifest and the position-delete manifest
-      val removed = fullyDead.toSet ++ rewrite
-      val prev: Seq[ManifestFile] = baseSnap.toSeq.flatMap(s =>
-        ManifestIO.readManifestList(
-          resolveAgainst(meta, tableDir, s.manifestList), conf))
-      val keptPrior: Seq[GenericRecord] = prev.zipWithIndex.flatMap { case (m, i) =>
-        val mPath = resolveAgainst(meta, tableDir, m.path)
-        if (m.content == 1) {
-          // delete manifests pass through untouched — except DV entries a
-          // new deletion vector supersedes (their positions were absorbed)
-          // and v2 files the DV commit made redundant (debt convergence)
-          val passThrough = Some(mlRec(mPath, m.length, m.content,
-            m.sequenceNumber, m.addedRowsCount, m.partitionSpecId, m.partitions))
-          if (!dvMode || posDel.isEmpty) passThrough
-          else dropSupersededDvEntries(mPath, conf, posDel.toSet,
-              p => norm(table.resolve(p)),
-              new Path(s"$tableDir/metadata/m-s$snapId-$u-d$i.avro"),
-              dropV2 = v2Drops) match {
-            case None => passThrough
-            case Some((_, _, _, true)) => None // every entry superseded
-            case Some((newPath, rows, len, _)) =>
-              Some(mlRec(newPath, len, 1, m.sequenceNumber, Some(rows),
-                m.partitionSpecId, m.partitions))
-          }
-        }
-        else filterManifest(mPath, conf, removed,
-          new Path(s"$tableDir/metadata/m-s$snapId-$u-r$i.avro")) match {
-          case None =>
-            Some(mlRec(mPath, m.length, m.content, m.sequenceNumber,
-              m.addedRowsCount, m.partitionSpecId, m.partitions))
-          case Some((_, 0L, _, _)) => None
-          case Some((newPath, rows, len, _)) =>
-            Some(mlRec(newPath, len, m.content, m.sequenceNumber, Some(rows),
-              m.partitionSpecId, m.partitions))
-        }
-      }
-      val newMl = writeNewManifest(conf, tableDir, meta, snapId, rewrittenAdds)
+      // files, plus the rewrite manifest and the position-delete manifest.
+      // Delete manifests pass through untouched — except, in DV mode, the
+      // entries the new vectors supersede or make redundant
+      val removed = withoutFiles(fullyDead.toSet ++ rewrite)
       // removed data files' stats are known from the planned candidates
-      val removedStats = removed.toSeq.flatMap(p => candidates.find(_.filePath == p))
-        .foldLeft((0L, 0L, 0L)) { (t, f) =>
-          plus(t, (f.recordCount, f.fileSizeInBytes, 1L)) }
-      val totals = baseSnap.flatMap(parsedTotals)
-        .map(t => plus(minus(t, removedStats), addedTotals(rewrittenAdds)))
-      commitSnapshot(cmtr, snapId, parent,
-        keptPrior ++ newMl ++ posDelMl, Map("operation" -> "delete"),
-        ref = branch, refExpected = refExpected, totals = totals)
-      snapId
+      val removedFiles = candidates.filter(f =>
+        fullyDead.contains(f.filePath) || rewrite.contains(f.filePath))
+      produce(b, SnapshotUpdate("delete",
+        b.newManifest(rewrittenAdds, meta).toSeq ++ posDelMl,
+        carry = m => if (m.content == 1) deletes else removed,
+        totals = adjust(fileTotals(removedFiles), addedTotals(rewrittenAdds))))
     } finally matched.unpersist()
+  }
+
+  /** Delete manifests of the base, classified by the kind of delete
+    * FILES they carry: (manifest, entries, kind) with kind 1 = position,
+    * 2 = equality. A manifest mixing kinds is refused loudly — the
+    * compaction/conversion procedures re-stamp sequence numbers per
+    * manifest, and mis-stamping across kinds would change semantics. */
+  private def classifyDeleteManifests(b: CommitBase, verb: String)
+      : Seq[(ManifestFile, Seq[DeleteFileEntry], Int)] =
+    b.prior.filter(_.content == 1).map { m =>
+      val entries = ManifestIO.readDeleteManifest(m.path, b.conf, m.sequenceNumber)
+      val kinds = entries.map(_.content).toSet
+      require(kinds.size <= 1,
+        s"delete manifest ${m.path} mixes position and equality files — " +
+          s"refusing to $verb rather than mis-stamp sequence numbers")
+      (m, entries, kinds.headOption.getOrElse(1))
+    }
+
+  /** Write `rows` (`file_path`, `pos`) as ONE spec-sorted position-delete
+    * parquet file plus its manifest, returning the manifest-list record
+    * (None when `rowCount` is 0). Shared by every v2 position-delete
+    * writer — one copy of the field-id metadata, sort order, and
+    * manifest-entry layout. */
+  private def writeMergedPositionDeletes(
+      b: CommitBase, rows: DataFrame, rowCount: Long): Option[GenericRecord] = {
+    if (rowCount == 0) return None
+    val delDir = s"${b.tableDir}/data/del-s${b.snapId}-${b.u}"
+    val pathMeta = new org.apache.spark.sql.types.MetadataBuilder()
+      .putLong("parquet.field.id", PosDelPathId).build()
+    val posMeta = new org.apache.spark.sql.types.MetadataBuilder()
+      .putLong("parquet.field.id", PosDelPosId).build()
+    rows.select(col("file_path").as("file_path", pathMeta),
+        col("pos").as("pos", posMeta))
+      .repartition(1).sortWithinPartitions("file_path", "pos")
+      .write.mode("overwrite").parquet(delDir)
+    val fs = new Path(delDir).getFileSystem(b.conf)
+    val delFiles = fs.listStatus(new Path(delDir))
+      .filter(_.getPath.getName.endsWith(".parquet")).toSeq
+    val entries = delFiles.map(st =>
+      deleteEntryRecord(st.getPath.toString, "PARQUET", rowCount, st.getLen))
+    Some(b.deleteManifest("del", entries, rowCount))
   }
 
   /** Compact merge-on-read POSITION-delete debt — Iceberg's
@@ -2112,69 +2084,13 @@ object IcebergWriter {
     * positionDeleteFilesRewritten, fullyDeletedDataFilesRemoved);
     * (-1 current id, 0, 0) when there is nothing to do.
     */
-  /** Delete manifests of the current snapshot, classified by the kind of
-    * delete FILES they carry: (manifest, entries, kind) with kind 1 =
-    * position, 2 = equality. A manifest mixing kinds is refused loudly —
-    * the compaction/conversion procedures re-stamp sequence numbers per
-    * manifest, and mis-stamping across kinds would change semantics. */
-  private def classifyDeleteManifests(
-      meta: TableMetadata, tableDir: String,
-      conf: org.apache.hadoop.conf.Configuration,
-      prev: Seq[ManifestFile], verb: String)
-      : Seq[(ManifestFile, Seq[DeleteFileEntry], Int)] =
-    prev.filter(_.content == 1).map { m =>
-      val entries = ManifestIO.readDeleteManifest(
-        resolveAgainst(meta, tableDir, m.path), conf, m.sequenceNumber)
-      val kinds = entries.map(_.content).toSet
-      require(kinds.size <= 1,
-        s"delete manifest ${m.path} mixes position and equality files — " +
-          s"refusing to $verb rather than mis-stamp sequence numbers")
-      (m, entries, kinds.headOption.getOrElse(1))
-    }
-
-  /** Write `rows` (`file_path`, `pos`) as ONE spec-sorted position-delete
-    * parquet file plus its manifest, returning the manifest-list record
-    * (None when `rowCount` is 0). Shared by the position-delete merge and
-    * the equality→position conversion — one copy of the field-id
-    * metadata, sort order, and manifest-entry layout. */
-  private def writeMergedPositionDeletes(
-      conf: org.apache.hadoop.conf.Configuration, tableDir: String,
-      snapId: Long, u: String, rows: DataFrame, rowCount: Long,
-      specId: Int): Option[GenericRecord] = {
-    if (rowCount == 0) return None
-    val delDir = s"$tableDir/data/del-s$snapId-$u"
-    val pathMeta = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong("parquet.field.id", PosDelPathId).build()
-    val posMeta = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong("parquet.field.id", PosDelPosId).build()
-    rows.select(col("file_path").as("file_path", pathMeta),
-        col("pos").as("pos", posMeta))
-      .repartition(1).sortWithinPartitions("file_path", "pos")
-      .write.mode("overwrite").parquet(delDir)
-    val fs = new Path(delDir).getFileSystem(conf)
-    val delFiles = fs.listStatus(new Path(delDir))
-      .filter(_.getPath.getName.endsWith(".parquet")).toSeq
-    val entries = delFiles.map(st =>
-      deleteEntryRecord(st.getPath.toString, "PARQUET", rowCount, st.getLen))
-    val mPath = new Path(s"$tableDir/metadata/m-del-s$snapId-$u.avro")
-    val mLen = writeAvro(mPath, conf, deleteManifestSchema, entries)
-    Some(mlRec(mPath.toString, mLen, 1, Some(snapId), Some(rowCount),
-      specId, Nil))
-  }
-
   def rewritePositionDeleteFiles(spark: SparkSession, tableDir: String,
                                  committer: Option[TableCommitter] = None)
       : (Long, Int, Int) = {
-    val conf = writeConf(spark, committer)
-    val cmtr = committer.getOrElse(new FsCommitter(tableDir, conf))
-    val meta = cmtr.currentMetadata()
-    val t = IcebergTable.fromMetadata(tableDir, conf, meta, vendedOf(committer))
-    val noop = (meta.currentSnapshotId.getOrElse(-1L), 0, 0)
-    val prev: Seq[ManifestFile] = meta.currentSnapshot.toSeq.flatMap(s =>
-      ManifestIO.readManifestList(
-        resolveAgainst(meta, tableDir, s.manifestList), conf))
-    val classified = classifyDeleteManifests(meta, tableDir, conf, prev,
-      "compact")
+    val b = begin(writeConf(spark, committer), tableDir, committer)
+    val t = b.table
+    val noop = (b.meta.currentSnapshotId.getOrElse(-1L), 0, 0)
+    val classified = classifyDeleteManifests(b, "compact")
     val posManifests = classified.filter(_._3 == 1)
     if (posManifests.isEmpty) return noop
     val posFiles = posManifests.flatMap(_._2)
@@ -2183,8 +2099,6 @@ object IcebergWriter {
         "DV maintenance is not implemented (DV support is read-path) — " +
         "rewrite_data_files materializes them instead")
 
-    val snapId = meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1L
-    val u = uniq()
     def norm(s: String) = IcebergTable.normPathStatic(s)
     val dataFiles = t.planFiles()
     val byNorm: Map[String, DataFileEntry] =
@@ -2215,51 +2129,21 @@ object IcebergWriter {
       val keep =
         if (fullyDeadNorm.isEmpty) live
         else live.filter(!col("__np").isInCollection(fullyDeadNorm.toSeq))
-      val delMl: Option[GenericRecord] = writeMergedPositionDeletes(
-        conf, tableDir, snapId, u, keep, remainingRows, meta.defaultSpecId)
+      val delMl = writeMergedPositionDeletes(b, keep, remainingRows)
 
       // data manifests: fold fully-dead files away; equality delete
       // manifests pass through; position delete manifests are superseded
-      var droppedTotal = 0L
-      val keptPrior: Seq[GenericRecord] = prev.zipWithIndex.flatMap {
-        case (m, _) if m.content == 1 =>
-          if (classified.exists(c => c._1 == m && c._3 == 2))
-            Some(mlRec(resolveAgainst(meta, tableDir, m.path), m.length,
-              m.content, m.sequenceNumber, m.addedRowsCount,
-              m.partitionSpecId, m.partitions))
-          else None // position-delete manifest: superseded by the merge
-        case (m, i) =>
-          val mPath = resolveAgainst(meta, tableDir, m.path)
-          if (fullyDead.isEmpty)
-            Some(mlRec(mPath, m.length, m.content, m.sequenceNumber,
-              m.addedRowsCount, m.partitionSpecId, m.partitions))
-          else filterManifest(mPath, conf, fullyDead,
-            new Path(s"$tableDir/metadata/m-s$snapId-$u-r$i.avro")) match {
-            case None =>
-              Some(mlRec(mPath, m.length, m.content, m.sequenceNumber,
-                m.addedRowsCount, m.partitionSpecId, m.partitions))
-            case Some((_, 0L, _, d)) => droppedTotal += d; None
-            case Some((newPath, rows, len, d)) =>
-              droppedTotal += d
-              Some(mlRec(newPath, len, m.content, m.sequenceNumber,
-                Some(rows), m.partitionSpecId, m.partitions))
-          }
-      }
-      if (droppedTotal != fullyDead.size)
-        throw new CommitConflictException(
-          s"rewrite_position_delete_files: $droppedTotal of " +
+      val eqManifests = classified.filter(_._3 == 2).map(_._1).toSet
+      val dead = withoutFiles(fullyDead)
+      produce(b, SnapshotUpdate("replace", delMl.toSeq,
+        carry = m =>
+          if (m.content != 1) dead else if (eqManifests(m)) Keep else Drop,
+        expectDropped = Some((fullyDead.size, n =>
+          s"rewrite_position_delete_files: $n of " +
             s"${fullyDead.size} fully-deleted files found in the current " +
-            "snapshot — a concurrent rewrite moved them; retry")
-
-      val removedStats = fullyDeadNorm.map(byNorm(_))
-        .foldLeft((0L, 0L, 0L)) { (a, f) =>
-          plus(a, (f.recordCount, f.fileSizeInBytes, 1L)) }
-      val totals = meta.currentSnapshot.flatMap(parsedTotals)
-        .map(minus(_, removedStats))
-      commitSnapshot(cmtr, snapId,
-        meta.currentSnapshotId.filter(_ != -1L),
-        keptPrior ++ delMl, Map("operation" -> "replace"), totals = totals)
-      (snapId, posFiles.size, fullyDead.size)
+            "snapshot — a concurrent rewrite moved them; retry")),
+        totals = adjust(removed = fileTotals(fullyDeadNorm.toSeq.map(byNorm)))))
+      (b.snapId, posFiles.size, fullyDead.size)
     } finally { live.unpersist(); () }
   }
 
@@ -2285,22 +2169,13 @@ object IcebergWriter {
   def convertEqualityDeletes(spark: SparkSession, tableDir: String,
                              committer: Option[TableCommitter] = None)
       : (Long, Int, Long) = {
-    val conf = writeConf(spark, committer)
-    val cmtr = committer.getOrElse(new FsCommitter(tableDir, conf))
-    val meta = cmtr.currentMetadata()
-    val t = IcebergTable.fromMetadata(tableDir, conf, meta, vendedOf(committer))
+    val b = begin(writeConf(spark, committer), tableDir, committer)
+    val (meta, t) = (b.meta, b.table)
     val noop = (meta.currentSnapshotId.getOrElse(-1L), 0, 0L)
-    val prev: Seq[ManifestFile] = meta.currentSnapshot.toSeq.flatMap(s =>
-      ManifestIO.readManifestList(
-        resolveAgainst(meta, tableDir, s.manifestList), conf))
-    val classified = classifyDeleteManifests(meta, tableDir, conf, prev,
-      "convert")
-    val eqManifests = classified.filter(_._3 == 2)
+    val eqManifests = classifyDeleteManifests(b, "convert").filter(_._3 == 2)
     if (eqManifests.isEmpty) return noop
     val eqFiles = eqManifests.flatMap(_._2)
 
-    val snapId = meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1L
-    val u = uniq()
     val positions = t.equalityDeletePositions(spark)
       .dropDuplicates("file_path", "pos")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -2312,13 +2187,8 @@ object IcebergWriter {
       // file), absorbing that file's EXISTING positions (the spec's
       // one-DV-per-file superset rule) so superseded DV entries — and
       // v2 position files the new vectors fully cover — drop below
-      val dvMode = dvWriteMode(meta)
-      val (delMl: Option[GenericRecord], dvTargets: Set[String],
-          v2Drops: Set[String]) =
-        if (!dvMode)
-          (writeMergedPositionDeletes(
-            conf, tableDir, snapId, u, positions, nRows, meta.defaultSpecId),
-            Set.empty[String], Set.empty[String])
+      val (delMl: Option[GenericRecord], absorbed: Carry) =
+        if (!dvWriteMode(meta)) (writeMergedPositionDeletes(b, positions, nRows), Keep)
         else {
           val withRef = positions
             .withColumn("__ref", t.normPathExpr(col("file_path")))
@@ -2326,49 +2196,22 @@ object IcebergWriter {
           // bounded driver read: the eq-affected file set (same class as
           // the row-level writers' per-file planning)
           val refs = withRef.select("__ref").distinct()
-            .collect().map(_.getString(0)).toSeq
-          if (refs.isEmpty) (None, Set.empty[String], Set.empty[String])
+            .collect().map(_.getString(0)).toSet
+          if (refs.isEmpty) (None, Keep)
           else {
             val byNorm = t.planFiles()
               .map(f => t.normPath(t.resolve(f.filePath)) -> f).toMap
-            val targets: Map[String, Long] = refs.map(r =>
-              r -> byNorm(r).sequenceNumber.getOrElse(-1L)).toMap
-            val all = dvAbsorbPositions(spark, t, targets)
-              .map(withRef.unionByName(_)).getOrElse(withRef)
-            val storedByNorm = refs.map(r => r -> byNorm(r).filePath).toMap
-            (writeDvManifest(spark, conf, tableDir, meta, snapId, u, all,
-              storedByNorm), refs.toSet,
-              dvConvergedV2Drops(spark, t, refs.toSet))
+            writeDeletionVectors(spark, b, t, withRef,
+              refs.iterator.map(r => r -> byNorm(r)).toMap, prefix = "m-ceq")
           }
         }
       // equality manifests drop (converted); data manifests pass
       // through; position-delete manifests pass through untouched in v2
       // mode, and in DV mode shed the entries the new vectors absorbed
-      val keptPrior: Seq[GenericRecord] = prev.zipWithIndex.flatMap {
-        case (m, i) =>
-          val mPath = resolveAgainst(meta, tableDir, m.path)
-          val passThrough = Some(mlRec(mPath, m.length,
-            m.content, m.sequenceNumber, m.addedRowsCount,
-            m.partitionSpecId, m.partitions))
-          if (m.content == 1 && eqManifests.exists(_._1 == m)) None
-          else if (m.content == 1 && dvMode && dvTargets.nonEmpty)
-            dropSupersededDvEntries(mPath, conf, dvTargets,
-              p => t.normPath(t.resolve(p)),
-              new Path(s"$tableDir/metadata/m-ceq-s$snapId-$u-d$i.avro"),
-              dropV2 = v2Drops) match {
-              case None => passThrough
-              case Some((_, _, _, true)) => None // every entry superseded
-              case Some((newPath, rows, len, _)) =>
-                Some(mlRec(newPath, len, 1, m.sequenceNumber, Some(rows),
-                  m.partitionSpecId, m.partitions))
-            }
-          else passThrough
-      }
-      commitSnapshot(cmtr, snapId,
-        meta.currentSnapshotId.filter(_ != -1L),
-        keptPrior ++ delMl, Map("operation" -> "replace"),
-        totals = meta.currentSnapshot.flatMap(parsedTotals))
-      (snapId, eqFiles.size, nRows)
+      val converted = eqManifests.map(_._1).toSet
+      produce(b, SnapshotUpdate("replace", delMl.toSeq, carry = m =>
+        if (m.content != 1) Keep else if (converted(m)) Drop else absorbed))
+      (b.snapId, eqFiles.size, nRows)
     } finally { positions.unpersist(); () }
   }
 
@@ -2392,21 +2235,13 @@ object IcebergWriter {
                         dataFilePath: String, positions: Seq[Long],
                         committer: Option[TableCommitter] = None): Long = {
     require(positions.nonEmpty, "a deletion vector must delete something")
-    val conf = writeConf(spark, committer)
-    val cmtr = committer.getOrElse(new FsCommitter(tableDir, conf))
-    val meta = cmtr.currentMetadata()
-    val t = IcebergTable.fromMetadata(tableDir, conf, meta, vendedOf(committer))
+    val b = begin(writeConf(spark, committer), tableDir, committer)
+    val (conf, t, snapId) = (b.conf, b.table, b.snapId)
     require(t.planFiles().exists(_.filePath == dataFilePath),
       s"addDeletionVector: $dataFilePath is not a live data file")
-    val snapId = meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1L
-    val u = uniq()
 
-    val prevAll: Seq[ManifestFile] = meta.currentSnapshot.toSeq.flatMap(s =>
-      ManifestIO.readManifestList(
-        resolveAgainst(meta, tableDir, s.manifestList), conf))
-    val withEntries = prevAll.filter(_.content == 1).map(m =>
-      m -> ManifestIO.readDeleteManifest(
-        resolveAgainst(meta, tableDir, m.path), conf, m.sequenceNumber))
+    val withEntries = b.prior.filter(_.content == 1).map(m =>
+      m -> ManifestIO.readDeleteManifest(m.path, conf, m.sequenceNumber))
     val (affected, _) = withEntries.partition(_._2.exists(d =>
       d.isDv && d.referencedDataFile.contains(dataFilePath)))
     affected.foreach { case (m, entries) =>
@@ -2422,10 +2257,10 @@ object IcebergWriter {
         d.contentOffset.get, d.contentSize.get.toInt)).toSeq
     }
     val allPositions = (positions ++ priorPositions).distinct
-    val affectedPaths = affected.map(_._1.path).toSet
+    val superseded = affected.map(_._1).toSet
 
     val blobPayload = DeletionVectors.encode(allPositions)
-    val pPath = new Path(s"$tableDir/data/dv-s$snapId-$u.puffin")
+    val pPath = new Path(s"$tableDir/data/dv-s$snapId-${b.u}.puffin")
     // blob snapshot-id and sequence-number both identify the committing
     // snapshot (our sequence convention is the snapshot id throughout)
     val written = Puffin.write(pPath, conf, Seq(Puffin.Blob(
@@ -2437,21 +2272,10 @@ object IcebergWriter {
     val e = deleteEntryRecord(pPath.toString, "PUFFIN",
       allPositions.size.toLong, written.fileSizeInBytes,
       dv = Some((dataFilePath, blobOffset, blobPayload.length.toLong)))
-    val mPath = new Path(s"$tableDir/metadata/m-dv-s$snapId-$u.avro")
-    val mLen = writeAvro(mPath, conf, deleteManifestSchema, Seq(e))
-
     // superseded DV manifests drop; everything else passes through
-    val keptPrior = prevAll.filterNot(m =>
-        m.content == 1 && affectedPaths.contains(m.path))
-      .map(m => mlRec(resolveAgainst(meta, tableDir, m.path),
-        m.length, m.content, m.sequenceNumber, m.addedRowsCount,
-        m.partitionSpecId, m.partitions))
-    val dvMl = mlRec(mPath.toString, mLen, 1, Some(snapId),
-      Some(allPositions.size.toLong), meta.defaultSpecId, Nil)
-    commitSnapshot(cmtr, snapId, meta.currentSnapshotId.filter(_ != -1L),
-      keptPrior :+ dvMl, Map("operation" -> "delete"),
-      totals = meta.currentSnapshot.flatMap(parsedTotals))
-    snapId
+    produce(b, SnapshotUpdate("delete",
+      Seq(b.deleteManifest("dv", Seq(e), allPositions.size.toLong)),
+      carry = m => if (superseded(m)) Drop else Keep))
   }
 
   /** Row-level deletes in the v3 DELETION-VECTOR form (`deletion-
@@ -2550,10 +2374,30 @@ object IcebergWriter {
     val entries = written.toSeq.map { case (ref, pPath, fSize, off, size, card) =>
       deleteEntryRecord(pPath, "PUFFIN", card, fSize, dv = Some((ref, off, size)))
     }
-    val mPath = new Path(s"$tableDir/metadata/m-dv-s$snapId-$u.avro")
-    val mLen = writeAvro(mPath, conf, deleteManifestSchema, entries)
-    Some(mlRec(mPath.toString, mLen, 1, Some(snapId),
-      Some(written.map(_._6).sum), meta.defaultSpecId, Nil))
+    Some(writeDeleteManifest(conf,
+      new Path(s"$tableDir/metadata/m-dv-s$snapId-$u.avro"), entries, snapId,
+      written.map(_._6).sum, meta.defaultSpecId))
+  }
+
+  /** Write `positions` (`__ref` = normalized path of a key of `files`,
+    * `pos`) as deletion vectors, one per file, each absorbing every
+    * older delete position for its file ([[dvAbsorbPositions]]). Returns
+    * the DV manifest's list record and the policy for the base's delete
+    * manifests: the vectors these supersede drop, and so do v2 files
+    * every live referenced file of which now carries a vector
+    * ([[dvConvergedV2Drops]] — the table's delete debt converges). */
+  private def writeDeletionVectors(spark: SparkSession, b: CommitBase,
+      table: IcebergTable, positions: DataFrame,
+      files: Map[String, DataFileEntry],
+      prefix: String = "m"): (Option[GenericRecord], Carry) = {
+    val targets = files.map { case (np, f) => np -> f.sequenceNumber.getOrElse(-1L) }
+    val all = dvAbsorbPositions(spark, table, targets)
+      .map(positions.unionByName(_)).getOrElse(positions)
+    val ml = writeDvManifest(spark, b.conf, b.tableDir, b.meta, b.snapId, b.u,
+      all, files.map { case (np, f) => np -> f.filePath })
+    val v2Drops = dvConvergedV2Drops(spark, table, files.keySet)
+    (ml, withoutSuperseded(files.keySet, v2Drops,
+      p => table.normPath(table.resolve(p)), prefix))
   }
 
   /** Every prior delete position a NEW deletion vector for `targets`
@@ -2651,52 +2495,6 @@ object IcebergWriter {
     (hintedDrop ++ unhintedDrop).map(d => norm(d.filePath)).toSet
   }
 
-  /** Rewrite a delete manifest dropping (a) the DV entries a new vector
-    * supersedes (those referencing a path in `targets`) and (b) the v2
-    * position-delete files in `dropV2` (normalized paths — see
-    * [[dvConvergedV2Drops]]). None = nothing to drop (pass the original
-    * through); Some((_, _, _, true)) = every entry dropped (drop the
-    * manifest from the list); otherwise the rewritten manifest's (path,
-    * surviving rows, length, false) — the SAME tuple order as
-    * [[filterManifest]], so the two rewrite helpers cannot be
-    * destructured interchangeably-but-wrong. */
-  private def dropSupersededDvEntries(
-      path: String, conf: org.apache.hadoop.conf.Configuration,
-      targets: Set[String], normResolve: String => String,
-      outPath: Path, dropV2: Set[String] = Set.empty): Option[(String, Long, Long, Boolean)] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val in = fs.open(p)
-    val bytes = try in.readAllBytes() finally in.close()
-    val reader = new org.apache.avro.file.DataFileReader[GenericRecord](
-      new org.apache.avro.file.SeekableByteArrayInput(bytes),
-      new org.apache.avro.generic.GenericDatumReader[GenericRecord]())
-    val (kept, dropped) = try {
-      val all = Vector.newBuilder[GenericRecord]
-      while (reader.hasNext) all += reader.next()
-      all.result().partition { r =>
-        val df = r.get("data_file").asInstanceOf[GenericRecord]
-        val isDv = Option(df.get("file_format"))
-          .exists(f => String.valueOf(f).equalsIgnoreCase("puffin")) ||
-          df.getSchema.getField("content_offset") != null &&
-            df.get("content_offset") != null
-        val ref = Option(df.getSchema.getField("referenced_data_file"))
-          .flatMap(_ => Option(df.get("referenced_data_file")))
-          .map(String.valueOf(_))
-        val superseded = isDv && ref.exists(r2 => targets.contains(normResolve(r2)))
-        val converged = !isDv && df.get("content") == 1 &&
-          dropV2.contains(normResolve(String.valueOf(df.get("file_path"))))
-        !(superseded || converged)
-      }
-    } finally reader.close()
-    if (dropped.isEmpty) return None
-    if (kept.isEmpty) return Some((path, 0L, 0L, true))
-    val liveRows = kept.map(_.get("data_file").asInstanceOf[GenericRecord]
-      .get("record_count").asInstanceOf[java.lang.Number].longValue).sum
-    val len = writeAvro(outPath, conf, kept.head.getSchema, kept)
-    Some((outPath.toString, liveRows, len, false))
-  }
-
   /** ANALYZE for the cost-based optimizer: ONE distributed aggregate pass
     * over the current snapshot computes per-column NDV
     * (`approx_count_distinct`) and, for strings/binary, average/max
@@ -2717,10 +2515,8 @@ object IcebergWriter {
   def analyzeTable(spark: SparkSession, tableDir: String,
                    columns: Seq[String] = Nil,
                    committer: Option[TableCommitter] = None): (Long, Int) = {
-    val conf = writeConf(spark, committer)
-    val cmtr = committer.getOrElse(new FsCommitter(tableDir, conf))
-    val meta = cmtr.currentMetadata()
-    val t = IcebergTable.fromMetadata(tableDir, conf, meta, vendedOf(committer))
+    val b = begin(writeConf(spark, committer), tableDir, committer)
+    val (conf, meta, t) = (b.conf, b.meta, b.table)
     import org.apache.spark.sql.types.{BinaryType, StringType}
     // approx_count_distinct needs a Spark-hashable type: every scalar
     // plus arrays/structs of them (XxHash64 walks those) — but not maps,
@@ -2857,9 +2653,8 @@ object IcebergWriter {
       }
       u
     }
-    cmtr.commit(
-      Seq(MetadataCommit.assertRefSnapshotId(mapper, "main",
-        meta.currentSnapshotId.filter(_ != -1L))),
+    b.cmtr.commit(
+      Seq(MetadataCommit.assertRefSnapshotId(mapper, "main", b.parent)),
       Seq(upd, statUpd))
     (meta.currentSnapshotId.getOrElse(-1L), target.size)
   }
@@ -2887,16 +2682,8 @@ object IcebergWriter {
       branch: String = "main",
       operation: String = "overwrite"): Long = {
     if (added.isEmpty && posDeletes.isEmpty) return -1L
-    val conf = writeConf(spark, committer)
-    val cmtr = committer.getOrElse(new FsCommitter(tableDir, conf))
-    val meta = cmtr.currentMetadata()
-    val (baseSnap, parent, refExpected) = branchBase(meta, branch)
-    val snapId = meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1L
-    val u = uniq()
-
-    val prev: Seq[ManifestFile] = baseSnap.toSeq.flatMap(s =>
-      ManifestIO.readManifestList(
-        resolveAgainst(meta, tableDir, s.manifestList), conf))
+    val b = begin(writeConf(spark, committer), tableDir, committer, branch)
+    val conf = b.conf
 
     // v3 deletion-vector mode: the per-task position-delete parquet the
     // delta writers produced is a staging form here — one bounded read
@@ -2907,76 +2694,36 @@ object IcebergWriter {
     // files are absorbed and superseded; the staging parquet is deleted
     // after the commit (it was written by THIS operation's tasks and no
     // snapshot ever referenced it).
-    val dvMode = dvWriteMode(meta) && posDeletes.nonEmpty
-    lazy val dvTable: IcebergTable = {
-      val t0 = IcebergTable.fromMetadata(tableDir, conf, meta, vendedOf(committer))
-      if (branch == "main" || !meta.refs.contains(branch)) t0
-      else t0.atSnapshot(baseSnap.get.snapshotId)
-    }
-    val dvResult: Option[(GenericRecord, Set[String], Set[String])] = if (!dvMode) None
-    else {
-      val t = dvTable
-      val newPos = spark.read.schema(t.posDeleteReadSchema)
-        .parquet(posDeletes.map(_._1): _*)
-        .select(t.normPathExpr(t.resolveExpr(col("file_path"))).as("__ref"),
-          col("pos"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val byNorm: Map[String, DataFileEntry] = t.planFiles()
-          .map(f => t.normPath(t.resolve(f.filePath)) -> f).toMap
-        val refs = newPos.select("__ref").distinct()
-          .collect().map(_.getString(0)).toSeq
-        val unknown = refs.filterNot(byNorm.contains)
-        require(unknown.isEmpty,
-          s"delta delete references non-live data files: ${unknown.take(3).mkString(", ")}")
-        val targets = refs.map(r =>
-          r -> byNorm(r).sequenceNumber.getOrElse(-1L)).toMap
-        val all = dvAbsorbPositions(spark, t, targets)
-          .map(newPos.unionByName(_)).getOrElse(newPos)
-        val storedByNorm = refs.map(r => r -> byNorm(r).filePath).toMap
-        // v2 debt convergence, same rule as positionDeleteWhere's DV branch
-        val v2Drops = dvConvergedV2Drops(spark, t, refs.toSet)
-        writeDvManifest(spark, conf, tableDir, meta, snapId, u, all, storedByNorm)
-          .map(ml => (ml, refs.toSet, v2Drops))
-      } finally { newPos.unpersist(); () }
-    }
-    val dvTargets: Set[String] = dvResult.map(_._2).getOrElse(Set.empty)
-    val dvV2Drops: Set[String] = dvResult.map(_._3).getOrElse(Set.empty)
-
-    val keptPrior: Seq[GenericRecord] = prev.zipWithIndex.flatMap { case (m, i) =>
-      val mPath = resolveAgainst(meta, tableDir, m.path)
-      val passThrough = Some(mlRec(mPath, m.length, m.content,
-        m.sequenceNumber, m.addedRowsCount, m.partitionSpecId, m.partitions))
-      if (m.content != 1 || dvTargets.isEmpty) passThrough
-      else dropSupersededDvEntries(mPath, conf, dvTargets,
-          p => dvTable.normPath(dvTable.resolve(p)),
-          new Path(s"$tableDir/metadata/m-s$snapId-$u-d$i.avro"),
-          dropV2 = dvV2Drops) match {
-        case None => passThrough
-        case Some((_, _, _, true)) => None
-        case Some((newPath, rows, len, _)) =>
-          Some(mlRec(newPath, len, 1, m.sequenceNumber, Some(rows),
-            m.partitionSpecId, m.partitions))
+    val dvMode = dvWriteMode(b.meta) && posDeletes.nonEmpty
+    val (delMl: Option[GenericRecord], absorbed: Carry) =
+      if (posDeletes.isEmpty) (None, Keep)
+      else if (!dvMode) (Some(b.deleteManifest("del", posDeletes.map {
+        case (path, rows, len) => deleteEntryRecord(path, "PARQUET", rows, len)
+      }, posDeletes.map(_._2).sum)), Keep)
+      else {
+        val t = b.table
+        val newPos = spark.read.schema(t.posDeleteReadSchema)
+          .parquet(posDeletes.map(_._1): _*)
+          .select(t.normPathExpr(t.resolveExpr(col("file_path"))).as("__ref"),
+            col("pos"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          val byNorm: Map[String, DataFileEntry] = t.planFiles()
+            .map(f => t.normPath(t.resolve(f.filePath)) -> f).toMap
+          val refs = newPos.select("__ref").distinct()
+            .collect().map(_.getString(0)).toSeq
+          val unknown = refs.filterNot(byNorm.contains)
+          require(unknown.isEmpty,
+            s"delta delete references non-live data files: ${unknown.take(3).mkString(", ")}")
+          writeDeletionVectors(spark, b, t, newPos,
+            refs.map(r => r -> byNorm(r)).toMap)
+        } finally { newPos.unpersist(); () }
       }
-    }
-    val newMl = writeNewManifest(conf, tableDir, meta, snapId, added)
-    val delMl: Option[GenericRecord] = if (posDeletes.isEmpty) None
-    else if (dvMode) dvResult.map(_._1)
-    else {
-      val entries = posDeletes.map { case (path, rows, len) =>
-        deleteEntryRecord(path, "PARQUET", rows, len)
-      }
-      val mPath = new Path(s"$tableDir/metadata/m-del-s$snapId-$u.avro")
-      val mLen = writeAvro(mPath, conf, deleteManifestSchema, entries)
-      Some(mlRec(mPath.toString, mLen, 1, Some(snapId),
-        Some(posDeletes.map(_._2).sum), meta.defaultSpecId, Nil))
-    }
     // merge-on-read never touches data files: totals only grow by the adds
-    val totals = baseSnap.flatMap(parsedTotals)
-      .map(t => plus(t, addedTotals(added)))
-    commitSnapshot(cmtr, snapId, parent, keptPrior ++ newMl ++ delMl,
-      Map("operation" -> operation), ref = branch,
-      refExpected = refExpected, totals = totals)
+    val snapId = produce(b, SnapshotUpdate(operation,
+      b.newManifest(added).toSeq ++ delMl,
+      carry = m => if (m.content == 1) absorbed else Keep,
+      totals = adjust(added = addedTotals(added))))
     // DV mode: the staging parquet was consumed into the committed DV
     // blobs and no snapshot references it — drop it now rather than
     // leaving orphans for reachability cleanup
@@ -2999,29 +2746,26 @@ object IcebergWriter {
   private def referencedPaths(
       conf: org.apache.hadoop.conf.Configuration, tableDir: String,
       meta: TableMetadata, snap: IcebergSnapshot): (Set[String], Set[String]) = {
-    val listPath = resolveAgainst(meta, tableDir, snap.manifestList)
-    val manifests = ManifestIO.readManifestList(listPath, conf)
-    val metaPaths = Set(listPath) ++
-      manifests.map(m => resolveAgainst(meta, tableDir, m.path))
-    val filePaths = manifests.flatMap { m =>
-      val p = new Path(resolveAgainst(meta, tableDir, m.path))
-      val fs = p.getFileSystem(conf)
-      val in = fs.open(p)
-      val bytes = try in.readAllBytes() finally in.close()
-      val reader = new org.apache.avro.file.DataFileReader[GenericRecord](
-        new org.apache.avro.file.SeekableByteArrayInput(bytes),
-        new org.apache.avro.generic.GenericDatumReader[GenericRecord]())
-      try {
-        val b = Vector.newBuilder[String]
-        while (reader.hasNext) {
-          val df = reader.next().get("data_file").asInstanceOf[GenericRecord]
-          b += resolveAgainst(meta, tableDir, String.valueOf(df.get("file_path")))
-        }
-        b.result()
-      } finally reader.close()
-    }.toSet
-    (metaPaths, filePaths)
+    def resolve(p: String) = resolveAgainst(meta, tableDir, p)
+    val listPath = resolve(snap.manifestList)
+    val manifests = ManifestIO.readManifestList(listPath, conf).map(m => resolve(m.path))
+    val filePaths = manifests.flatMap(m =>
+      ManifestIO.readRawEntries(m, conf).map(e => resolve(e.filePath))).toSet
+    (manifests.toSet + listPath, filePaths)
   }
+
+  /** Physical-deletion gate: a snapshot-clone ([[TableClone]]) shares its
+    * source's files, so maintenance that DELETES files must refuse on
+    * `gc.enabled=false` (the Iceberg procedures refuse identically) —
+    * deleting a "no longer referenced" file here would corrupt the
+    * source table that still references it. */
+  private def requireGcEnabled(meta: TableMetadata, tableDir: String,
+                               what: String): Unit =
+    require(!meta.properties.get("gc.enabled").contains("false"),
+      s"$what on $tableDir refused: gc.enabled=false (this table shares " +
+        "files with another table — a snapshot clone; physically deleting " +
+        "them would corrupt the source). Drop the clone instead, or flip " +
+        "gc.enabled only if you are certain the files are exclusively owned.")
 
   /** Expire snapshots with commit time strictly before `olderThanMs`,
     * always retaining the current snapshot and the `retainLast` most
@@ -3047,25 +2791,11 @@ object IcebergWriter {
     * floor. One call expresses "keep audit branches 7 days, main 100
     * snapshots".
     */
-  /** Physical-deletion gate: a snapshot-clone ([[TableClone]]) shares its
-    * source's files, so maintenance that DELETES files must refuse on
-    * `gc.enabled=false` (the Iceberg procedures refuse identically) —
-    * deleting a "no longer referenced" file here would corrupt the
-    * source table that still references it. */
-  private def requireGcEnabled(meta: TableMetadata, tableDir: String,
-                               what: String): Unit =
-    require(!meta.properties.get("gc.enabled").contains("false"),
-      s"$what on $tableDir refused: gc.enabled=false (this table shares " +
-        "files with another table — a snapshot clone; physically deleting " +
-        "them would corrupt the source). Drop the clone instead, or flip " +
-        "gc.enabled only if you are certain the files are exclusively owned.")
-
   def expireSnapshots(spark: SparkSession, tableDir: String,
                       olderThanMs: Long, retainLast: Int = 1,
                       committer: Option[TableCommitter] = None): Int = {
-    val conf = writeConf(spark, committer)
-    val cmtr = committer.getOrElse(new FsCommitter(tableDir, conf))
-    val meta = cmtr.currentMetadata()
+    val b = begin(writeConf(spark, committer), tableDir, committer)
+    val (conf, meta) = (b.conf, b.meta)
     requireGcEnabled(meta, tableDir, "expire_snapshots")
     val sorted = meta.snapshots.sortBy(s => (s.timestampMs, s.snapshotId))
     val now = System.currentTimeMillis
@@ -3156,9 +2886,8 @@ object IcebergWriter {
     val snapRemovals =
       if (expired.isEmpty) Nil
       else Seq(MetadataCommit.removeSnapshots(mapper, expired.map(_.snapshotId)))
-    cmtr.commit(
-      Seq(MetadataCommit.assertRefSnapshotId(mapper, "main",
-        meta.currentSnapshotId.filter(_ != -1L))),
+    b.cmtr.commit(
+      Seq(MetadataCommit.assertRefSnapshotId(mapper, "main", b.parent)),
       refRemovals ++ snapRemovals)
 
     // 2. best-effort physical cleanup (expired-only trees)
@@ -3185,9 +2914,8 @@ object IcebergWriter {
   def removeOrphanFiles(spark: SparkSession, tableDir: String,
                         olderThanMs: Long,
                         committer: Option[TableCommitter] = None): Int = {
-    val conf = writeConf(spark, committer)
-    val cmtr = committer.getOrElse(new FsCommitter(tableDir, conf))
-    val meta = cmtr.currentMetadata()
+    val b = begin(writeConf(spark, committer), tableDir, committer)
+    val (conf, meta) = (b.conf, b.meta)
     requireGcEnabled(meta, tableDir, "remove_orphan_files")
     def norm(s: String) = IcebergTable.normPathStatic(s)
     // BOTH halves of the referenced set: data file paths for the data
@@ -3270,34 +2998,19 @@ object IcebergWriter {
   def rewriteManifests(spark: SparkSession, tableDir: String,
                        targetEntriesPerManifest: Int = 8192,
                        committer: Option[TableCommitter] = None): Long = {
-    val conf = writeConf(spark, committer)
-    val cmtr = committer.getOrElse(new FsCommitter(tableDir, conf))
-    val meta = cmtr.currentMetadata()
-    val prev: Seq[ManifestFile] = meta.currentSnapshot.toSeq.flatMap(s =>
-      ManifestIO.readManifestList(
-        resolveAgainst(meta, tableDir, s.manifestList), conf))
+    val b = begin(writeConf(spark, committer), tableDir, committer)
+    val prev = b.prior
     require(!prev.exists(_.content == 1),
       "rewriteManifests on a table with delete manifests: materialize " +
         "deletes first (IcebergWriter.compact) — merged manifests cannot " +
         "preserve per-manifest sequence numbers")
     if (prev.sizeIs <= 1) return -1L
-    val snapId = meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1L
 
     // read each manifest's raw records under its embedded writer schema
     val loaded: Seq[(ManifestFile, org.apache.avro.Schema, Seq[GenericRecord])] =
       prev.map { m =>
-        val p = new Path(resolveAgainst(meta, tableDir, m.path))
-        val fs = p.getFileSystem(conf)
-        val in = fs.open(p)
-        val bytes = try in.readAllBytes() finally in.close()
-        val reader = new org.apache.avro.file.DataFileReader[GenericRecord](
-          new org.apache.avro.file.SeekableByteArrayInput(bytes),
-          new org.apache.avro.generic.GenericDatumReader[GenericRecord]())
-        try {
-          val b = Vector.newBuilder[GenericRecord]
-          while (reader.hasNext) b += reader.next()
-          (m, reader.getSchema, b.result())
-        } finally reader.close()
+        val (schema, entries) = ManifestIO.readRecords(m.path, b.conf)
+        (m, schema, entries)
       }
 
     val merged: Seq[GenericRecord] = loaded
@@ -3305,9 +3018,7 @@ object IcebergWriter {
       .toSeq.sortBy(_._1._2)
       .flatMap { case ((_, specId), group) =>
         if (group.sizeIs == 1) {
-          val (m, _, _) = group.head
-          Seq(mlRec(resolveAgainst(meta, tableDir, m.path), m.length, m.content,
-            m.sequenceNumber, m.addedRowsCount, m.partitionSpecId, m.partitions))
+          Seq(mlRec(group.head._1))
         } else {
           val schema = group.head._2
           val entries = group.flatMap(_._3)
@@ -3339,18 +3050,16 @@ object IcebergWriter {
             }
           entries.grouped(math.max(targetEntriesPerManifest, 1)).zipWithIndex
             .map { case (chunk, i) =>
-              val mPath =
-                new Path(s"$tableDir/metadata/m-s$snapId-${uniq()}-c$specId-$i.avro")
-              val len = writeAvro(mPath, conf, schema, chunk)
+              val mPath = new Path(
+                s"$tableDir/metadata/m-s${b.snapId}-${uniq()}-c$specId-$i.avro")
+              val len = writeAvro(mPath, b.conf, schema, chunk)
               mlRec(mPath.toString, len, 0, minSeq, rows, specId, summaries)
             }.toSeq
         }
       }
     if (merged.size >= prev.size) return -1L // nothing got smaller
-    commitSnapshot(cmtr, snapId, meta.currentSnapshotId.filter(_ != -1L),
-      merged, Map("operation" -> "replace"),
-      totals = meta.currentSnapshot.flatMap(parsedTotals)) // metadata-only: data unchanged
-    snapId
+    // merged re-records every base manifest; metadata-only: data unchanged
+    produce(b, SnapshotUpdate("replace", merged, truncate = true))
   }
 
   /** Unsigned lexicographic byte comparison (Iceberg single-value bound
@@ -3380,13 +3089,13 @@ object IcebergWriter {
                 name: String, snapshotId: Long, refType: String = "tag",
                 committer: Option[TableCommitter] = None,
                 retention: RefRetention = RefRetention()): Unit = {
-    val cmtr = committer.getOrElse(new FsCommitter(tableDir, conf))
-    val meta = cmtr.currentMetadata()
+    val b = begin(conf, tableDir, committer)
+    val meta = b.meta
     require(meta.snapshots.exists(_.snapshotId == snapshotId),
       s"snapshot $snapshotId not in $tableDir (have: " +
         s"${meta.snapshots.map(_.snapshotId).mkString(", ")})")
     val mapper = new ObjectMapper()
-    cmtr.commit(Nil,
+    b.cmtr.commit(Nil,
       Seq(MetadataCommit.setSnapshotRef(mapper, name, snapshotId, refType,
         retention,
         // a caller STATING a policy means exactly that policy (whole-
@@ -3404,13 +3113,13 @@ object IcebergWriter {
   def setRefRetention(conf: org.apache.hadoop.conf.Configuration,
                       tableDir: String, name: String, retention: RefRetention,
                       committer: Option[TableCommitter] = None): Unit = {
-    val cmtr = committer.getOrElse(new FsCommitter(tableDir, conf))
-    val meta = cmtr.currentMetadata()
+    val b = begin(conf, tableDir, committer)
+    val meta = b.meta
     val head = meta.refs.getOrElse(name, throw new NoSuchElementException(
       s"ref '$name' not found (have: ${meta.refs.keys.mkString(", ")})"))
     val refType = if (meta.tagRefs.contains(name)) "tag" else "branch"
     val mapper = new ObjectMapper()
-    cmtr.commit(
+    b.cmtr.commit(
       Seq(MetadataCommit.assertRefSnapshotId(mapper, name, Some(head))),
       // whole-policy form: knobs this retention leaves unset are CLEARED
       // (explicit nulls), so setRefRetention(RefRetention()) removes the
@@ -3422,7 +3131,8 @@ object IcebergWriter {
   def dropRef(conf: org.apache.hadoop.conf.Configuration, tableDir: String,
               name: String, committer: Option[TableCommitter] = None): Unit = {
     require(name != "main", "cannot drop the main ref (the table head)")
-    val cmtr = committer.getOrElse(new FsCommitter(tableDir, conf))
+    // no metadata read: the removal needs no base
+    val cmtr = committerOf(conf, tableDir, committer)
     val mapper = new ObjectMapper()
     val n = mapper.createObjectNode()
     n.put("action", "remove-snapshot-ref")
@@ -3442,8 +3152,8 @@ object IcebergWriter {
   def fastForward(conf: org.apache.hadoop.conf.Configuration, tableDir: String,
                   from: String, target: String = "main",
                   committer: Option[TableCommitter] = None): Long = {
-    val cmtr = committer.getOrElse(new FsCommitter(tableDir, conf))
-    val meta = cmtr.currentMetadata()
+    val b = begin(conf, tableDir, committer)
+    val meta = b.meta
     // the same tag guard branchBase applies to writes: set-snapshot-ref
     // defaults the ref's type to 'branch', so fast-forwarding ONTO a tag
     // would both move an immutable pointer and silently retype it
@@ -3467,7 +3177,7 @@ object IcebergWriter {
         s"'$from' head $fromHead — '$target' advanced since the branch " +
         "forked; rebase the branch before publishing"))
     val mapper = new ObjectMapper()
-    cmtr.commit(
+    b.cmtr.commit(
       Seq(MetadataCommit.assertRefSnapshotId(mapper, target, targetHead)),
       Seq(MetadataCommit.setSnapshotRef(mapper, target, fromHead)))
     fromHead
@@ -3499,8 +3209,8 @@ object IcebergWriter {
   def cherrypickSnapshot(conf: org.apache.hadoop.conf.Configuration,
                          tableDir: String, snapshotId: Long,
                          committer: Option[TableCommitter] = None): Long = {
-    val cmtr = committer.getOrElse(new FsCommitter(tableDir, conf))
-    val meta = cmtr.currentMetadata()
+    val b = begin(conf, tableDir, committer)
+    val meta = b.meta
     val byId = meta.snapshots.map(s => s.snapshotId -> s).toMap
     val staged = byId.getOrElse(snapshotId, throw new IllegalArgumentException(
       s"cherrypick_snapshot: snapshot $snapshotId not found in $tableDir"))
@@ -3509,8 +3219,7 @@ object IcebergWriter {
       s"cherrypick_snapshot: snapshot $snapshotId is a '$op' — only pure " +
         "append snapshots can be re-applied; publish the branch with " +
         "fast_forward instead")
-    val mainHead = meta.currentSnapshotId.filter(_ != -1L)
-    val mainAncestors = Iterator.iterate(mainHead.flatMap(byId.get))(
+    val mainAncestors = Iterator.iterate(b.parent.flatMap(byId.get))(
       _.flatMap(_.parentSnapshotId).flatMap(byId.get))
       .takeWhile(_.isDefined).flatten.map(_.snapshotId)
       .take(meta.snapshots.size).toSet
@@ -3532,9 +3241,7 @@ object IcebergWriter {
       s"cherrypick_snapshot: snapshot $snapshotId was already cherry-picked " +
         "onto main (ledger property) — refusing a double publish")
 
-    def ml(s: IcebergSnapshot): Seq[ManifestFile] = ManifestIO.readManifestList(
-      resolveAgainst(meta, tableDir, s.manifestList), conf)
-    val stagedMl = ml(staged)
+    val stagedMl = b.manifests(staged)
     // the delta is staged-vs-ITS-OWN-parent: with the parent expired the
     // subtraction base is gone and "the delta" would silently become the
     // branch's ENTIRE state (pre-fork data included) — refuse, don't guess
@@ -3542,14 +3249,13 @@ object IcebergWriter {
       s"cherrypick_snapshot: snapshot $snapshotId's parent $p has been " +
         "expired — the append delta cannot be computed; publish the " +
         "branch with fast_forward or re-stage the commit"))
-    val parentMl = staged.parentSnapshotId.flatMap(byId.get).toSeq.flatMap(ml)
-    def key(m: ManifestFile) = resolveAgainst(meta, tableDir, m.path)
-    val parentKeys = parentMl.map(key).toSet
-    require(parentKeys.subsetOf(stagedMl.map(key).toSet),
+    val parentKeys = staged.parentSnapshotId.flatMap(byId.get).toSeq
+      .flatMap(b.manifests).map(_.path).toSet
+    require(parentKeys.subsetOf(stagedMl.map(_.path).toSet),
       s"cherrypick_snapshot: snapshot $snapshotId dropped or rewrote its " +
         "parent's manifests (compaction or a non-additive write mislabeled " +
         "append) — the delta is not a graftable append")
-    val delta = stagedMl.filterNot(m => parentKeys.contains(key(m)))
+    val delta = stagedMl.filterNot(m => parentKeys.contains(m.path))
     require(delta.nonEmpty,
       s"cherrypick_snapshot: snapshot $snapshotId added no manifests")
     require(delta.forall(_.content == 0),
@@ -3557,15 +3263,14 @@ object IcebergWriter {
         "position deletes bind to a base snapshot main never had; publish " +
         "with fast_forward")
 
-    val headMl = mainHead.flatMap(byId.get).toSeq.flatMap(ml)
     // double-publish guard at FILE granularity: a manifest rewrite
     // (rewrite_manifests) can repackage already-published files under a
     // new manifest path, so comparing manifest paths is not enough
-    val headFiles: Set[String] = headMl.filter(_.content == 0).flatMap(m =>
-      ManifestIO.readManifest(key(m), conf, m.sequenceNumber,
+    val headFiles: Set[String] = b.prior.filter(_.content == 0).flatMap(m =>
+      ManifestIO.readManifest(m.path, conf, m.sequenceNumber,
         m.partitionSpecId).map(_.filePath)).toSet
     val deltaEntries = delta.flatMap(m =>
-      ManifestIO.readManifest(key(m), conf, m.sequenceNumber,
+      ManifestIO.readManifest(m.path, conf, m.sequenceNumber,
         m.partitionSpecId))
     val overlap = deltaEntries.map(_.filePath).filter(headFiles)
     require(overlap.isEmpty,
@@ -3573,28 +3278,16 @@ object IcebergWriter {
         s"$snapshotId are already reachable from main's head (e.g. " +
         s"${overlap.head}) — refusing a double publish")
 
-    val newId = meta.snapshots.map(_.snapshotId).max + 1L
-    val listRecs = headMl.map(m => mlRec(key(m), m.length, m.content,
-        m.sequenceNumber, m.addedRowsCount, m.partitionSpecId, m.partitions)) ++
-      delta.map(m => mlRec(key(m), m.length, m.content,
-        Some(newId), m.addedRowsCount, m.partitionSpecId, m.partitions))
-    val addTot: Totals = deltaEntries.foldLeft((0L, 0L, 0L): Totals)((a, f) =>
-      plus(a, (f.recordCount, f.fileSizeInBytes, 1L)))
-    val totals = mainHead.flatMap(h => parsedTotals(byId(h))) match {
-      case Some(t) => Some(plus(t, addTot))
-      case None if mainHead.isEmpty => Some(addTot)
-      case None => None // head exists but carries no totals: stay silent
-    }
     val mapper = new ObjectMapper()
     val ledger = mapper.createObjectNode()
     ledger.put("action", "set-properties")
     ledger.putObject("updates")
-      .put(s"graft.cherrypicked.$snapshotId", newId.toString)
-    commitSnapshot(cmtr, newId, mainHead, listRecs,
-      Map("operation" -> "append",
-        "source-snapshot-id" -> snapshotId.toString),
-      totals = totals,
-      extraUpdates = Seq(ledger))
-    newId
+      .put(s"graft.cherrypicked.$snapshotId", b.snapId.toString)
+    // grafted manifests re-stamped to the new snapshot's sequence number
+    produce(b, SnapshotUpdate("append",
+      delta.map(m => mlRec(m.copy(sequenceNumber = Some(b.snapId)))),
+      totals = adjust(added = fileTotals(deltaEntries)),
+      summary = Map("source-snapshot-id" -> snapshotId.toString),
+      extraUpdates = Seq(ledger)))
   }
 }

@@ -2,6 +2,7 @@ package graft.iceberg
 
 import java.nio.ByteBuffer
 
+import org.apache.avro.Schema
 import org.apache.avro.file.{DataFileReader, SeekableByteArrayInput}
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.hadoop.conf.Configuration
@@ -125,6 +126,18 @@ object ManifestIO {
     val bytes = try in.readAllBytes() finally in.close()
     new DataFileReader[GenericRecord](
       new SeekableByteArrayInput(bytes), new GenericDatumReader[GenericRecord]())
+  }
+
+  /** Every entry of one manifest as a raw record, with the manifest's
+    * embedded writer schema — for rewrites that must keep the fields
+    * this library does not model. */
+  def readRecords(path: String, conf: Configuration): (Schema, Vector[GenericRecord]) = {
+    val reader = open(path, conf)
+    try {
+      val b = Vector.newBuilder[GenericRecord]
+      while (reader.hasNext) b += reader.next()
+      (reader.getSchema, b.result())
+    } finally reader.close()
   }
 
   private def opt(rec: GenericRecord, name: String): Option[AnyRef] =

@@ -113,8 +113,11 @@ object Profiler {
         tvd.as("tvd"), tvt.as("tvt"), tvn.as("tvn"),
         col(c).isNull.as("isn"))
     }: _*)).as("p")).select(col("p.*"))
-    // the typed temporal slots are injective functions of the render
-    // (sv), so adding them to the group key changes no group boundaries
+    // the typed temporal slots split no group the render (sv) alone
+    // would form, except for DST-ambiguous instants: two instants in a
+    // fall-back hour render to the same local string, and the typed key
+    // keeps them apart — which makes n_distinct agree with
+    // profileSingleAgg
     val lvl1 = pairs.groupBy("cn", "sv", "dv", "lv", "tvd", "tvt", "tvn", "isn")
       .agg(count(lit(1)).as("cnt"))
     val lvl2 = lvl1.groupBy("cn").agg(

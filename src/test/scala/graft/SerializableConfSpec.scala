@@ -30,6 +30,18 @@ class SerializableConfSpec extends AnyFunSuite {
     assert(roundTrip(w).value.get("graft.test.other") == "constant")
   }
 
+  test("swapping two property VALUES after first serialization yields fresh bytes") {
+    val conf = new org.apache.hadoop.conf.Configuration(false)
+    conf.set("graft.test.a", "left")
+    conf.set("graft.test.b", "right")
+    val w = new SerializableHadoopConf(conf)
+    assert(roundTrip(w).value.get("graft.test.a") == "left") // primes cache
+    conf.set("graft.test.a", "right") // same count, same multiset of values
+    conf.set("graft.test.b", "left")
+    val got = roundTrip(w).value
+    assert(got.get("graft.test.a") == "right" && got.get("graft.test.b") == "left")
+  }
+
   test("add/remove still invalidates; unchanged conf reuses cached bytes") {
     val conf = new org.apache.hadoop.conf.Configuration(false)
     conf.set("k1", "v1")
