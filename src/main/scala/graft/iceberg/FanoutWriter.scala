@@ -9,7 +9,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
-import org.apache.spark.sql.connector.write.{DataWriter, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{DataWriter, DataWriterFactory,
+  WriterCommitMessage}
 import org.apache.spark.sql.types._
 
 /** `Configuration` is not `Serializable`; it is `Writable`. Spark's own
@@ -115,11 +116,12 @@ private[graft] final case class GraftFilesCommit(files: Seq[AddedDataFile])
     extends WriterCommitMessage
 
 /** Table-metadata-derived write-type guards, computed ONCE driver-side
-  * ([[WriteTypeGuards.forTable]]) and threaded into every
-  * [[FanoutWriterFactory]] construction — V1 append, DSv2 row-level
-  * rewrites, dynamic overwrite, and the streaming sink all share one
-  * rulebook (the r17 review found the DSv2 paths missing the
-  * metadata-keyed checks the append path enforced).
+  * ([[WriteTypeGuards.forTable]]) by [[FanoutWriterFactory.forTable]],
+  * the one write setup every data-file write goes through — so the
+  * DataFrame writes, the copy-on-write replace, dynamic overwrite and
+  * the merge-on-read delta share one rulebook (the r17 review found the
+  * DSv2 paths missing the metadata-keyed checks the append path
+  * enforced).
   *
   *  - `geoByName`: top-level geometry/geography columns (name → declared
   *    type string). Writable: WKB passthrough with spec bounding-box
@@ -197,8 +199,11 @@ private[graft] final case class WritePartitionField(
 
 /** Executor-side fanout data-file writer (parquet, ORC, or Avro, per
   * the table's `write.format-default`) — the single write kernel behind
-  * INSERT/CTAS commits, copy-on-write `ReplaceData` (UPDATE / MERGE /
-  * range DELETE), and the streaming sink.
+  * every data-file write, always built by [[FanoutWriterFactory.forTable]]:
+  * INSERT/CTAS, overwrite, compaction and the streaming sinks through
+  * [[IcebergWriter.writeDataFiles]], copy-on-write `ReplaceData`
+  * (UPDATE / MERGE / range DELETE), dynamic `INSERT OVERWRITE`, and the
+  * merge-on-read delta's inserts.
   *
   * Each task routes rows to one open file per distinct partition tuple,
   * evaluating the table's partition transforms per row through the SAME
@@ -236,11 +241,12 @@ private[graft] final class FanoutWriterFactory(
     /** Table-metadata-derived type guards ([[WriteTypeGuards.forTable]]):
       * refusal messages for shapes this engine cannot write conformantly
       * (nested geo/ns, geo/ns on ORC/Avro, geo/ns partition sources) and
-      * the authoritative geo/ns column sets. Factory-site threading
-      * closes the r17 gap where DSv2 row-level paths missed the
-      * metadata-keyed refusals the V1 append path enforced. */
+      * the authoritative geo/ns column sets. One setup for every write
+      * ([[FanoutWriterFactory.forTable]]) closes the r17 gap where DSv2
+      * row-level paths missed the metadata-keyed refusals the V1 append
+      * path enforced. */
     guards: WriteTypeGuards = WriteTypeGuards.none)
-    extends Serializable {
+    extends DataWriterFactory {
 
   // Type-guard refusals fail at factory construction — driver-side,
   // before any task launches.
@@ -290,7 +296,7 @@ private[graft] final class FanoutWriterFactory(
 
   import FanoutWriterFactory.MaxOpenWriters
 
-  def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
+  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
 
       private val xform: UnsafeProjection =
@@ -500,4 +506,65 @@ private[graft] object FanoutWriterFactory {
     * executor memory; beyond it, eldest-first rollover trades file count
     * for bounded memory. */
   val MaxOpenWriters = 64
+
+  /** The one write setup behind every data-file write — the DataFrame
+    * path ([[IcebergWriter.writeDataFiles]]: INSERT, overwrite,
+    * compaction, rewrites, streaming sinks) and the DSv2 writes in
+    * `connector` (copy-on-write replace, dynamic overwrite, merge-on-read
+    * delta). Everything it decides comes from `meta`:
+    *  - the write schema stamped with each column's field id, plus the
+    *    table's geometry/geography and timestamp_ns markers (the caller's
+    *    schema may not carry them);
+    *  - with `lineage`, the two v3 lineage columns appended under their
+    *    reserved ids — the DSv2 writes feed them from Spark's metadata
+    *    projection — and recorded in the stats ids. A DataFrame that
+    *    already carries them keeps its own stamping and records no stats
+    *    for them;
+    *  - the partition spec resolved against the write schema;
+    *  - the data-file format, codec, target file size and type guards.
+    * `deletesOnly` marks a merge-on-read DELETE: its rows are row ids for
+    * position-delete files, so there is no partition spec to resolve and
+    * no data column for the type guards to refuse. */
+  def forTable(
+      meta: TableMetadata,
+      writeSchema: StructType,
+      writeDir: String,
+      conf: Configuration,
+      lineage: Boolean = false,
+      sortOrderId: Option[Int] = None,
+      deletesOnly: Boolean = false): FanoutWriterFactory = {
+    val format = IcebergWriter.tableWriteFormat(meta)
+    val guards =
+      if (deletesOnly) WriteTypeGuards.none
+      else WriteTypeGuards.forTable(meta, format)
+    val metaFields = meta.schema.fields.map(f => f.name -> f).toMap
+    val stamped = writeSchema.fields.map { f =>
+      meta.fieldIds.get(f.name).fold(f) { id =>
+        val mb = IcebergTable.withFieldId(id.toLong, f.metadata)
+        // the kernel and footerStats key bbox tracking, byte-bound
+        // suppression and the NANOS annotation on these markers
+        metaFields.get(f.name).foreach { mf =>
+          Seq(TableMetadata.GeoTypeKey, TableMetadata.NsTypeKey)
+            .filter(mf.metadata.contains)
+            .foreach(k => mb.putString(k, mf.metadata.getString(k)))
+        }
+        f.copy(metadata = mb.build())
+      }
+    }
+    val idToName = meta.fieldIds.map(_.swap)
+    val spec = if (deletesOnly) Nil else meta.partitionSpec.map { p =>
+      val idx = writeSchema.fieldIndex(idToName.getOrElse(p.sourceId,
+        throw new IllegalArgumentException(
+          s"partition source field id ${p.sourceId} not in schema")))
+      val st = writeSchema(idx).dataType
+      WritePartitionField(p.name, p.transform, idx, st,
+        PartitionTransforms.resultType(p.transform, st))
+    }
+    new FanoutWriterFactory(writeDir,
+      StructType(stamped ++ (if (lineage) IcebergTable.lineageFields() else Nil)),
+      if (lineage) meta.fieldIds ++ IcebergTable.lineageFieldIds else meta.fieldIds,
+      spec, new SerializableHadoopConf(conf), sortOrderId,
+      IcebergWriter.tableFormatCodec(meta, format),
+      IcebergWriter.targetFileSize(meta), format, guards)
+  }
 }

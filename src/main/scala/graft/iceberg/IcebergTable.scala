@@ -951,17 +951,7 @@ final class IcebergTable private (
         else {
           val baseHasIds =
             schema0.fields.exists(_.metadata.contains("parquet.field.id"))
-          def md(id: Long) =
-            if (baseHasIds) new org.apache.spark.sql.types.MetadataBuilder()
-              .putLong("parquet.field.id", id).build()
-            else org.apache.spark.sql.types.Metadata.empty
-          StructType(schema0.fields ++ Seq(
-            org.apache.spark.sql.types.StructField(
-              IcebergTable.RowIdCol, org.apache.spark.sql.types.LongType,
-              nullable = true, metadata = md(IcebergTable.RowIdFieldId)),
-            org.apache.spark.sql.types.StructField(
-              IcebergTable.LastUpdCol, org.apache.spark.sql.types.LongType,
-              nullable = true, metadata = md(IcebergTable.LastUpdFieldId))))
+          StructType(schema0.fields ++ IcebergTable.lineageFields(baseHasIds))
         }
       // required-with-initial-default columns read as nullable (the
       // reader refuses a missing required column before consulting
@@ -1744,6 +1734,34 @@ object IcebergTable {
     * the updating commit's sequence. */
   private[graft] val LastUpdCol = "_last_updated_sequence_number"
   private[graft] val LastUpdFieldId = 2147483539L
+
+  /** `base` plus the `parquet.field.id` entry Spark's parquet writer
+    * turns into the file schema's field id — the one spelling of the key
+    * on the write side. */
+  private[graft] def withFieldId(id: Long,
+      base: Metadata = Metadata.empty): MetadataBuilder =
+    new MetadataBuilder().withMetadata(base).putLong("parquet.field.id", id)
+
+  /** The two v3 lineage columns as nullable longs under their reserved
+    * field ids — the one definition every writer and the lineage read
+    * use; `withIds = false` keeps an id-free read schema id-free. */
+  private[graft] def lineageFields(withIds: Boolean = true): Seq[StructField] =
+    Seq(RowIdCol -> RowIdFieldId, LastUpdCol -> LastUpdFieldId).map {
+      case (name, id) => StructField(name, LongType, nullable = true,
+        if (withIds) withFieldId(id).build() else Metadata.empty)
+    }
+
+  /** Reserved field ids of the lineage columns, keyed by name. */
+  private[graft] val lineageFieldIds: Map[String, Int] =
+    Map(RowIdCol -> RowIdFieldId.toInt, LastUpdCol -> LastUpdFieldId.toInt)
+
+  /** The spec's position-delete file schema: required `file_path` and
+    * `pos` under their reserved field ids. */
+  private[graft] def posDeleteWriteSchema: StructType = StructType(Seq(
+    StructField("file_path", StringType, nullable = false,
+      withFieldId(IcebergWriter.PosDelPathId).build()),
+    StructField("pos", LongType, nullable = false,
+      withFieldId(IcebergWriter.PosDelPosId).build())))
 
   /** Release the storage behind a localCheckpoint'd DataFrame — the
     * checkpointed blocks cannot recompute, so callers may only release

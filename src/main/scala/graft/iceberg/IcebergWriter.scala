@@ -23,7 +23,8 @@ import org.apache.spark.sql.functions._
   * opens anyway — so everything this writer produces prunes at both the
   * manifest and the file level.
   *
-  * The data files themselves are written by Spark's parquet writer — the
+  * The data files themselves are written by executor tasks from the
+  * table's one write setup ([[FanoutWriterFactory.forTable]]) — the
   * commit protocol here is only the metadata bookkeeping, all through
   * Hadoop FileSystem so any object store works.
   */
@@ -670,15 +671,9 @@ object IcebergWriter {
     * fanout parquet writer materializes it as the spec's lineage column
     * (readable by field id or name). */
   private def stampLineageField(df: DataFrame): DataFrame = {
-    import graft.iceberg.IcebergTable.{RowIdCol, RowIdFieldId,
-      LastUpdCol, LastUpdFieldId}
-    def m(id: Long) = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong("parquet.field.id", id).build()
-    df.select(df.schema.fieldNames.toSeq.map {
-      case RowIdCol => col(RowIdCol).as(RowIdCol, m(RowIdFieldId))
-      case LastUpdCol => col(LastUpdCol).as(LastUpdCol, m(LastUpdFieldId))
-      case n => col(n)
-    }: _*)
+    val lineage = IcebergTable.lineageFields().map(f => f.name -> f).toMap
+    df.select(df.schema.fieldNames.toSeq.map(n =>
+      lineage.get(n).fold(col(n))(f => col(n).as(n, f.metadata))): _*)
   }
 
   /** Register EXISTING parquet or ORC files as a new append snapshot
@@ -857,9 +852,8 @@ object IcebergWriter {
     // 1. the equality-delete parquet file (field-id-stamped, one file)
     val subSchema = org.apache.spark.sql.types.StructType(cols.map { c =>
       val f = meta.schema(c)
-      f.copy(nullable = true, metadata =
-        new org.apache.spark.sql.types.MetadataBuilder()
-          .putLong("parquet.field.id", meta.fieldIds(c).toLong).build())
+      f.copy(nullable = true,
+        metadata = IcebergTable.withFieldId(meta.fieldIds(c).toLong).build())
     })
     val rows: java.util.List[org.apache.spark.sql.Row] =
       scala.jdk.CollectionConverters.SeqHasAsJava(
@@ -883,7 +877,7 @@ object IcebergWriter {
 
   /** Commit a copy-on-write FILE SWAP as a new snapshot: `removed` data
     * files leave the current snapshot and `added` parquet files (already
-    * on disk, written by [[connector.GraftReplaceWrite]]'s executors)
+    * on disk, written by [[connector.GraftDataFilesWrite]]'s executors)
     * enter via a fresh manifest. This is the commit half of DSv2
     * `ReplaceData` (SQL UPDATE / MERGE / copy-on-write DELETE).
     *
@@ -1134,21 +1128,6 @@ object IcebergWriter {
       Some(added.map(_.rows).sum), meta.defaultSpecId, summaries))
   }
 
-  /** Partition-spec fields resolved against a write schema. */
-  private def writeSpecFields(
-      meta: TableMetadata,
-      schema: org.apache.spark.sql.types.StructType): Seq[WritePartitionField] = {
-    val idToName = meta.fieldIds.map(_.swap)
-    meta.partitionSpec.map { p =>
-      val src = idToName.getOrElse(p.sourceId, throw new IllegalArgumentException(
-        s"partition source field id ${p.sourceId} not in schema"))
-      val idx = schema.fieldIndex(src)
-      val st = schema(idx).dataType
-      WritePartitionField(p.name, p.transform, idx, st,
-        PartitionTransforms.resultType(p.transform, st))
-    }
-  }
-
   /** The table's data-file format (Iceberg `write.format-default`):
     * PARQUET (our native default), ORC, or AVRO — the full spec format
     * matrix on the write side (the reference's entire engine is
@@ -1228,50 +1207,18 @@ object IcebergWriter {
   }
 
   /** Distributed data-file write: every partition of `df` streams through
-    * a [[FanoutWriterFactory]] task writer (partition-transform fanout,
-    * field-id-stamped parquet, own-footer stats), and only the small
-    * [[AddedDataFile]] bookkeeping returns to the driver. This is the
-    * DataFrame-API twin of the DSv2 `ReplaceData` write path — one write
-    * kernel, two entry points. */
+    * a task writer from the table's one write setup
+    * ([[FanoutWriterFactory.forTable]]: field-id stamping, partition
+    * fanout, format, codec, type guards), and only the small
+    * [[AddedDataFile]] bookkeeping returns to the driver. The DataFrame
+    * entry point; the DSv2 writes in `connector` build their task writers
+    * from the same setup. */
   private[graft] def writeDataFiles(
       df: DataFrame, writeDir: String, meta: TableMetadata,
       conf: org.apache.hadoop.conf.Configuration,
       sortOrderId: Option[Int] = None): Seq[AddedDataFile] = {
-    // v3 geometry/geography (WKB passthrough) and timestamp_ns (BIGINT-
-    // nanos opt-in) columns ARE writable — with spec bounding-box POINT
-    // bounds / the parquet NANOS annotation — for top-level parquet
-    // columns; the remaining non-conformant shapes (nested, ORC/Avro,
-    // partition sources) refuse loudly here, keyed off the TABLE
-    // metadata because the input df's schema is caller-built and
-    // carries no spatial/nanos markers.
-    val fmt = tableWriteFormat(meta)
-    val guards = WriteTypeGuards.forTable(meta, fmt)
-    guards.refusals.headOption.foreach(m =>
-      throw new UnsupportedOperationException(m))
-    val idByName = meta.fieldIds
-    val metaFieldByName = meta.schema.fields.map(f => f.name -> f).toMap
-    val stampedSchema = org.apache.spark.sql.types.StructType(
-      df.schema.fields.map { f =>
-        idByName.get(f.name) match {
-          case Some(id) =>
-            val mb = new org.apache.spark.sql.types.MetadataBuilder()
-              .withMetadata(f.metadata).putLong("parquet.field.id", id.toLong)
-            // carry the table's geo/ns markers onto the write schema so
-            // the fanout kernel and footerStats see them (bbox tracking,
-            // byte-bound suppression, NANOS annotation)
-            metaFieldByName.get(f.name).foreach { mf =>
-              Seq(TableMetadata.GeoTypeKey, TableMetadata.NsTypeKey)
-                .filter(mf.metadata.contains)
-                .foreach(k => mb.putString(k, mf.metadata.getString(k)))
-            }
-            f.copy(metadata = mb.build())
-          case None => f
-        }
-      })
-    val factory = new FanoutWriterFactory(writeDir, stampedSchema, idByName,
-      writeSpecFields(meta, df.schema), new SerializableHadoopConf(conf),
-      sortOrderId, tableFormatCodec(meta, fmt), targetFileSize(meta), fmt,
-      guards)
+    val factory = FanoutWriterFactory.forTable(meta, df.schema, writeDir, conf,
+      sortOrderId = sortOrderId)
     val dirPath = new Path(writeDir)
     val fs = dirPath.getFileSystem(conf)
     if (fs.exists(dirPath)) fs.delete(dirPath, true)
@@ -1970,21 +1917,11 @@ object IcebergWriter {
         // replacement files. ORC sources have no row positions: their
         // survivors' lineage degrades to null (same stance as the read).
         val lineage = wantsLineage(meta)
-        import graft.iceberg.IcebergTable.{RowIdCol, RowIdFieldId,
-          LastUpdCol, LastUpdFieldId}
+        import graft.iceberg.IcebergTable.{RowIdCol, LastUpdCol}
         def readSchema0 =
           if (!lineage) meta.schema
-          else {
-            def lm(id: Long) = new org.apache.spark.sql.types.MetadataBuilder()
-              .putLong("parquet.field.id", id).build()
-            org.apache.spark.sql.types.StructType(meta.schema.fields ++ Seq(
-              org.apache.spark.sql.types.StructField(RowIdCol,
-                org.apache.spark.sql.types.LongType, nullable = true,
-                metadata = lm(RowIdFieldId)),
-              org.apache.spark.sql.types.StructField(LastUpdCol,
-                org.apache.spark.sql.types.LongType, nullable = true,
-                metadata = lm(LastUpdFieldId))))
-          }
+          else org.apache.spark.sql.types.StructType(
+            meta.schema.fields ++ IcebergTable.lineageFields())
         def withLineage(df: DataFrame): DataFrame =
           if (!lineage) df
           else table.completeRowLineage(spark, df, candidates,
@@ -2045,12 +1982,8 @@ object IcebergWriter {
       b: CommitBase, rows: DataFrame, rowCount: Long): Option[GenericRecord] = {
     if (rowCount == 0) return None
     val delDir = s"${b.tableDir}/data/del-s${b.snapId}-${b.u}"
-    val pathMeta = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong("parquet.field.id", PosDelPathId).build()
-    val posMeta = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong("parquet.field.id", PosDelPosId).build()
-    rows.select(col("file_path").as("file_path", pathMeta),
-        col("pos").as("pos", posMeta))
+    rows.select(IcebergTable.posDeleteWriteSchema.fields.toSeq
+        .map(f => col(f.name).as(f.name, f.metadata)): _*)
       .repartition(1).sortWithinPartitions("file_path", "pos")
       .write.mode("overwrite").parquet(delDir)
     val fs = new Path(delDir).getFileSystem(b.conf)

@@ -104,21 +104,18 @@ final class GraftChangelogTable(
   override def capabilities(): JSet[TableCapability] =
     Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ).asJava
 
-  private def boolOpt(options: CaseInsensitiveStringMap, key: String): Boolean =
-    Option(options.get(key)).exists(_.toBoolean)
-
   /** The schema the scan will emit under `options` — also the validator
     * for the schema-shaping options (unknown columns, lineage on a
     * non-lineage table, `_row_id` shadowing all refuse loudly HERE, at
     * analysis, not at the first micro-batch). */
   def shapedSchema(options: CaseInsensitiveStringMap): StructType = {
-    val computeUpdates = boolOpt(options, "compute-updates")
+    val computeUpdates = ReadOptions.flag(options, "compute-updates")
     val v3 = IcebergWriter.wantsLineage(table.metadata)
-    if (boolOpt(options, "row-lineage") && !v3)
+    if (ReadOptions.flag(options, "row-lineage") && !v3)
       throw new UnsupportedOperationException(
         s"$tableName: the row-lineage read option needs v3 row lineage — " +
           "ALTER TABLE t SET TBLPROPERTIES ('format-version' = '3')")
-    val withLineage = boolOpt(options, "row-lineage") || (computeUpdates && v3)
+    val withLineage = ReadOptions.flag(options, "row-lineage") || (computeUpdates && v3)
     if (withLineage &&
         tableDataSchema.fieldNames.contains(IcebergTable.RowIdCol))
       throw new UnsupportedOperationException(
@@ -162,26 +159,18 @@ final class GraftChangelogTable(
     // weight by, and a commit is never split). Without it the first
     // batch is the whole pending history — on a long-lived table one
     // batch replaying everything.
-    val maxSnapshots = Option(options.get("maxSnapshotsPerTrigger")).map { v =>
-      val n = v.toInt
-      require(n > 0, s"maxSnapshotsPerTrigger must be positive, got $n")
-      n
-    }
+    val maxSnapshots = ReadOptions.positiveInt(options, "maxSnapshotsPerTrigger")
     // row-weighted admission: at most ~N CHANGE ROWS per micro-batch,
     // still snapshot-granular (commits never split — pairing is
     // commit-scoped). Weighted from manifest-list added/deleted row
     // counts (metadata-scale, no data IO); an oversized single commit is
     // admitted ALONE — bounded stall, guaranteed progress — instead of
     // one bulk commit riding with the whole backlog.
-    val maxRows = Option(options.get("maxRowsPerTrigger")).map { v =>
-      val n = v.toLong
-      require(n > 0, s"maxRowsPerTrigger must be positive, got $n")
-      n
-    }
+    val maxRows = ReadOptions.positiveLong(options, "maxRowsPerTrigger")
     // start the stream AFTER this snapshot instead of from table start
     // (the checkpoint-less "resume from here" upstream streams offer)
-    val startSnapshot = Option(options.get("start-snapshot-id")).map(_.toLong)
-    val computeUpdates = boolOpt(options, "compute-updates")
+    val startSnapshot = ReadOptions.long(options, "start-snapshot-id")
+    val computeUpdates = ReadOptions.flag(options, "compute-updates")
     val emitted = shapedSchema(options) // validates the option combination
     val withLineage =
       !computeUpdates && emitted.fieldNames.contains(IcebergTable.RowIdCol)

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.{MetadataBuilder, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.iceberg.{DataFileEntry, IcebergTable, IcebergWriter}
@@ -40,10 +40,10 @@ object RowLevelOps {
   *    of a matched file (the non-matching ones are written back
   *    verbatim), so even parquet page-level skipping on the condition
   *    would silently drop rows;
-  *  - a distributed replacement write ([[GraftReplaceWrite]]): executors
-  *    stream the rewritten rows to parquet, and the driver commit swaps
-  *    exactly the scanned files for the new ones in one snapshot
-  *    ([[IcebergWriter.replaceFiles]]).
+  *  - a distributed replacement write ([[GraftDataFilesWrite]]):
+  *    executors stream the rewritten rows to data files, and the driver
+  *    commit swaps exactly the scanned files for the new ones in one
+  *    snapshot ([[IcebergWriter.replaceFiles]]).
   *
   * At 100 TB the cost model is: files whose stats disprove the condition
   * are never read OR rewritten (static group pruning); the rest are
@@ -206,66 +206,41 @@ final class GraftRowLevelOperation(
       }
     }
 
+  /** The replacement write: executor tasks stream the rewritten rows
+    * through the table's fanout writers — partition-exact files, so
+    * replacement files on a partitioned table STAY under partition
+    * pruning — and the commit swaps exactly the configured scan's planned
+    * files for the written ones in one snapshot
+    * ([[IcebergWriter.replaceFiles]]) without opening a data file. With
+    * lineage on, each surviving row's `_row_id` and last-updated sequence
+    * arrive through the ReplaceData METADATA projection
+    * (`DataWriter.write(metadata, record)`) and are materialized into the
+    * replacement files (spec rewrite rule); MERGE-inserted rows write
+    * nulls (fresh ids assigned on read via the new file's first_row_id +
+    * pos). */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
       override def build(): Write =
-        new GraftReplaceWrite(table, () => configuredScan, info.schema(),
-          committerOpt)
+        new GraftDataFilesWrite(table, info.schema(), "rlo", lineageOn,
+          (conf, added) => {
+            val scan = configuredScan
+            require(scan != null,
+              "ReplaceData commit without a configured group scan")
+            IcebergWriter.replaceFiles(conf, table.tableDir,
+              scan.plannedFiles.map(_.filePath).toSet, added, committerOpt,
+              removedEntries = scan.plannedFiles,
+              // delete-applying reads materialized the deletions into the
+              // replacement files: delete manifests carry through. The
+              // planned set (empty for a clean-at-plan vectorized scan)
+              // turns ANY delete manifest that landed after planning into
+              // the CommitConflictException retry contract
+              carryDeleteManifests = scan.appliedDeletes,
+              plannedDeleteManifests = Some(scan.consumedDeleteManifests))
+            ()
+          })
     }
 }
 
-
-/** Shared write-side schema plumbing for the row-level operations: the
-  * field-id-stamped write schema (plus the reserved `_row_id` lineage
-  * column when requested), the fieldIds map the footer-stats lift uses,
-  * and the partition-spec fields resolved against the write schema —
-  * the same three values the CoW replacement write and the MoR delta
-  * write both need (and must keep identical). */
-private[connector] object RowLevelWriteSchemas {
-  def stampedSchema(meta: graft.iceberg.TableMetadata,
-      writeSchema: StructType, lineage: Boolean): StructType = {
-    val stamped0 = StructType(writeSchema.fields.map { f =>
-      meta.fieldIds.get(f.name) match {
-        case Some(id) => f.copy(metadata = new MetadataBuilder()
-          .withMetadata(f.metadata).putLong("parquet.field.id", id.toLong).build())
-        case None => f
-      }
-    })
-    if (!lineage) stamped0
-    else StructType(stamped0.fields ++ Seq(
-      org.apache.spark.sql.types.StructField(
-        IcebergTable.RowIdCol, org.apache.spark.sql.types.LongType,
-        nullable = true,
-        new MetadataBuilder()
-          .putLong("parquet.field.id", IcebergTable.RowIdFieldId).build()),
-      org.apache.spark.sql.types.StructField(
-        IcebergTable.LastUpdCol, org.apache.spark.sql.types.LongType,
-        nullable = true,
-        new MetadataBuilder()
-          .putLong("parquet.field.id", IcebergTable.LastUpdFieldId).build())))
-  }
-
-  def fieldIds(meta: graft.iceberg.TableMetadata,
-      lineage: Boolean): Map[String, Int] =
-    if (lineage)
-      meta.fieldIds +
-        (IcebergTable.RowIdCol -> IcebergTable.RowIdFieldId.toInt) +
-        (IcebergTable.LastUpdCol -> IcebergTable.LastUpdFieldId.toInt)
-    else meta.fieldIds
-
-  def partitionFields(meta: graft.iceberg.TableMetadata,
-      writeSchema: StructType): Seq[graft.iceberg.WritePartitionField] = {
-    val idToName = meta.fieldIds.map(_.swap)
-    meta.partitionSpec.map { p =>
-      val src = idToName.getOrElse(p.sourceId, throw new IllegalArgumentException(
-        s"partition source field id ${p.sourceId} not in schema"))
-      val idx = writeSchema.fieldIndex(src)
-      val st = writeSchema(idx).dataType
-      graft.iceberg.WritePartitionField(p.name, p.transform, idx, st,
-        graft.iceberg.PartitionTransforms.resultType(p.transform, st))
-    }
-  }
-}
 
 /** What the replacement write needs from whichever group scan Spark
   * configured: the exact planned file set its commit swaps out. */
@@ -551,68 +526,70 @@ final class GraftGroupScan(
   }
 }
 
-/** The replacement write: executor tasks stream rewritten rows through
-  * the shared [[graft.iceberg.FanoutWriterFactory]] kernel — partition-
-  * transform fanout (so replacement files on a partitioned table carry
-  * exact partition tuples and STAY under partition pruning, no
-  * de-clustering until compaction), field-id-stamped parquet, and
-  * own-footer column stats shipped in the commit messages. The driver
-  * commit swaps the scan's planned files for the written ones in a
-  * single snapshot without opening a data file.
-  */
-final class GraftReplaceWrite(
-    table: IcebergTable,
-    scanRef: () => GraftGroupScanLike,
-    writeSchema: StructType,
-    committerOpt: Option[graft.iceberg.TableCommitter] = None)
-    extends Write with RequiresDistributionAndOrdering {
+/** The driver half every DSv2 data-file write shares: the session Hadoop
+  * conf with the table's vended storage credentials, one writer-unique
+  * `data/<prefix>-<uuid12>` directory, the table's fanout writer factory
+  * over it ([[graft.iceberg.FanoutWriterFactory.forTable]]), and the
+  * abort that removes the directory. */
+private[connector] final class GraftWriteTarget(table: IcebergTable, prefix: String) {
+  val conf: org.apache.hadoop.conf.Configuration = SparkIcebergTable.withOverrides(
+    SparkSession.active.sessionState.newHadoopConf(), table.vended)
+  val writeDir: String =
+    s"${table.tableDir}/data/$prefix-${java.util.UUID.randomUUID.toString.take(12)}"
 
-  /** Cluster replacement rows by the partition transforms
-    * (`write.distribution-mode` hash, the partitioned default): a
-    * copy-on-write UPDATE rewriting K partitions should produce ~K
-    * files, not tasks × K. Not strictly required — Spark plans it as an
-    * AQE rebalance, so a hot partition splits instead of straggling. */
-  override def requiredDistribution()
-      : org.apache.spark.sql.connector.distributions.Distribution =
-    SparkIcebergTable.writeDistribution(table, writeSchema)
+  def fanout(writeSchema: StructType, lineage: Boolean,
+      deletesOnly: Boolean = false): graft.iceberg.FanoutWriterFactory =
+    graft.iceberg.FanoutWriterFactory.forTable(table.metadata, writeSchema,
+      writeDir, conf, lineage, deletesOnly = deletesOnly)
+
+  def abort(): Unit = {
+    new Path(writeDir).getFileSystem(conf).delete(new Path(writeDir), true)
+    ()
+  }
+}
+
+/** Clustering by the partition transforms as a request, not a rule: an
+  * UPDATE rewriting K partitions should produce ~K files, not tasks × K,
+  * and Spark plans the request as an AQE rebalance, so a hot partition
+  * splits instead of straggling. */
+private[connector] trait GraftClusteredWrite extends RequiresDistributionAndOrdering {
   override def requiredOrdering()
       : Array[org.apache.spark.sql.connector.expressions.SortOrder] = Array.empty
   override def distributionStrictlyRequired(): Boolean = false
+}
+
+/** DSv2 batch write of new data files, clustered by the partition
+  * transforms: the copy-on-write replacement (`rlo-` directory, commit
+  * [[IcebergWriter.replaceFiles]]) and dynamic partition overwrite
+  * (`dow-`, commit [[IcebergWriter.overwriteDynamicCommit]]). Executors
+  * write through the table's fanout writers and ship their files' stats
+  * in the commit messages; `commitFiles` receives the write's Hadoop conf
+  * and every written file. With `lineage`, each row's two lineage values
+  * arrive through Spark's metadata projection and are appended to the
+  * row (nulls for rows written without metadata). */
+final class GraftDataFilesWrite(
+    table: IcebergTable,
+    writeSchema: StructType,
+    prefix: String,
+    lineage: Boolean,
+    commitFiles: (org.apache.hadoop.conf.Configuration,
+      Seq[graft.iceberg.AddedDataFile]) => Unit)
+    extends Write with GraftClusteredWrite {
+
+  override def requiredDistribution()
+      : org.apache.spark.sql.connector.distributions.Distribution =
+    SparkIcebergTable.writeDistribution(table, writeSchema)
 
   override def toBatch: BatchWrite = new BatchWrite {
-    // vended per-table storage credentials ride the write data plane
-    private val conf = SparkIcebergTable.withOverrides(
-      SparkSession.active.sessionState.newHadoopConf(), table.vended)
-    private val writeDir =
-      s"${table.tableDir}/data/rlo-${java.util.UUID.randomUUID.toString.take(12)}"
+    private val target = new GraftWriteTarget(table, prefix)
 
     override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-      val meta = table.metadata
-      // v3 row lineage: the rewrite MATERIALIZES each surviving row's
-      // `_row_id` into the replacement files (spec rewrite rule) — Spark
-      // feeds it through the ReplaceData METADATA projection
-      // (`DataWriter.write(metadata, record)`), null for MERGE-inserted
-      // rows (fresh ids assigned on read via the new file's
-      // first_row_id + pos).
-      val lineage = IcebergWriter.wantsLineage(meta) &&
-        !meta.schema.fieldNames.contains(IcebergTable.RowIdCol)
-      val stamped = RowLevelWriteSchemas.stampedSchema(meta, writeSchema, lineage)
-      val spec = RowLevelWriteSchemas.partitionFields(meta, writeSchema)
-      val fmt = graft.iceberg.IcebergWriter.tableWriteFormat(meta)
-      val inner = new graft.iceberg.FanoutWriterFactory(
-        writeDir, stamped,
-        RowLevelWriteSchemas.fieldIds(meta, lineage),
-        spec,
-        new graft.iceberg.SerializableHadoopConf(conf),
-        codec = graft.iceberg.IcebergWriter.tableFormatCodec(meta, fmt),
-        targetFileBytes = graft.iceberg.IcebergWriter.targetFileSize(meta),
-        format = fmt,
-        guards = graft.iceberg.WriteTypeGuards.forTable(meta, fmt))
-      new DataWriterFactory {
+      val inner = target.fanout(writeSchema, lineage)
+      if (!lineage) inner
+      else new DataWriterFactory {
         override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
           val w = inner.createWriter(partitionId, taskId)
-          if (!lineage) w
-          else new DataWriter[InternalRow] {
+          new DataWriter[InternalRow] {
             // one reused concat view per task: the inner writer encodes
             // each row before write() returns, so reuse is safe
             private val joined =
@@ -632,110 +609,31 @@ final class GraftReplaceWrite(
       }
     }
 
-    override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val scan = scanRef()
-      require(scan != null,
-        "ReplaceData commit without a configured group scan")
-      val added = messages.collect {
+    override def commit(messages: Array[WriterCommitMessage]): Unit =
+      commitFiles(target.conf, messages.collect {
         case graft.iceberg.GraftFilesCommit(files) => files
-      }.toSeq.flatten
-      IcebergWriter.replaceFiles(conf, table.tableDir,
-        scan.plannedFiles.map(_.filePath).toSet, added, committerOpt,
-        removedEntries = scan.plannedFiles,
-        // delete-applying reads materialized the deletions into the
-        // replacement files: delete manifests carry through. The planned
-        // set (empty for a clean-at-plan vectorized scan) turns ANY
-        // delete manifest that landed after planning into the
-        // CommitConflictException retry contract
-        carryDeleteManifests = scan.appliedDeletes,
-        plannedDeleteManifests = Some(scan.consumedDeleteManifests))
-    }
+      }.toSeq.flatten)
 
-    override def abort(messages: Array[WriterCommitMessage]): Unit = {
-      val fs = new Path(writeDir).getFileSystem(conf)
-      fs.delete(new Path(writeDir), true)
-    }
+    override def abort(messages: Array[WriterCommitMessage]): Unit =
+      target.abort()
   }
 }
 
-/** DSv2 batch write for DYNAMIC partition overwrite: executors write
-  * partition-fanout files (same kernel as every other write — exact
-  * partition tuples, field-id-stamped parquet, own-footer stats in the
-  * commit messages); the driver commit replaces exactly the partitions
-  * the files landed in ([[IcebergWriter.overwriteDynamicCommit]]).
-  * Clustering by the partition transforms keeps it ~one file per
-  * replaced partition instead of tasks × partitions. */
-final class GraftDynamicOverwriteWrite(
-    table: IcebergTable,
-    committerOpt: Option[graft.iceberg.TableCommitter] = None,
-    branchOpt: Option[String] = None)
-    extends Write with RequiresDistributionAndOrdering {
-
-  private val writeSchema: StructType = table.metadata.schema
-
-  override def requiredDistribution()
-      : org.apache.spark.sql.connector.distributions.Distribution =
-    SparkIcebergTable.writeDistribution(table, writeSchema)
-  override def requiredOrdering()
-      : Array[org.apache.spark.sql.connector.expressions.SortOrder] = Array.empty
-  override def distributionStrictlyRequired(): Boolean = false
-
-  override def toBatch: BatchWrite = new BatchWrite {
-    // vended per-table storage credentials ride the write data plane
-    private val conf = SparkIcebergTable.withOverrides(
-      SparkSession.active.sessionState.newHadoopConf(), table.vended)
-    private val writeDir =
-      s"${table.tableDir}/data/dow-${java.util.UUID.randomUUID.toString.take(12)}"
-
-    override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-      val meta = table.metadata
-      val stamped = StructType(writeSchema.fields.map { f =>
-        meta.fieldIds.get(f.name) match {
-          case Some(id) => f.copy(metadata = new MetadataBuilder()
-            .withMetadata(f.metadata).putLong("parquet.field.id", id.toLong).build())
-          case None => f
-        }
+object GraftDataFilesWrite {
+  /** DYNAMIC partition overwrite: the commit replaces exactly the
+    * partitions the written files landed in (an unpartitioned table
+    * degenerates to replace-all). */
+  def dynamicOverwrite(table: IcebergTable,
+      committerOpt: Option[graft.iceberg.TableCommitter],
+      branchOpt: Option[String]): GraftDataFilesWrite =
+    new GraftDataFilesWrite(table, table.metadata.schema, "dow", lineage = false,
+      (_, added) => {
+        val spark = SparkSession.active
+        val branch = branchOpt.getOrElse(SparkIcebergTable.wapBranch(spark))
+        IcebergWriter.overwriteDynamicCommit(spark, table.tableDir, added,
+          committerOpt, branch)
+        ()
       })
-      val idToName = meta.fieldIds.map(_.swap)
-      val spec = meta.partitionSpec.map { p =>
-        val src = idToName.getOrElse(p.sourceId, throw new IllegalArgumentException(
-          s"partition source field id ${p.sourceId} not in schema"))
-        val idx = writeSchema.fieldIndex(src)
-        val st = writeSchema(idx).dataType
-        graft.iceberg.WritePartitionField(p.name, p.transform, idx, st,
-          graft.iceberg.PartitionTransforms.resultType(p.transform, st))
-      }
-      val fmt = graft.iceberg.IcebergWriter.tableWriteFormat(meta)
-      val inner = new graft.iceberg.FanoutWriterFactory(
-        writeDir, stamped, meta.fieldIds, spec,
-        new graft.iceberg.SerializableHadoopConf(conf),
-        codec = graft.iceberg.IcebergWriter.tableFormatCodec(meta, fmt),
-        targetFileBytes = graft.iceberg.IcebergWriter.targetFileSize(meta),
-        format = fmt,
-        guards = graft.iceberg.WriteTypeGuards.forTable(meta, fmt))
-      new DataWriterFactory {
-        override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-          inner.createWriter(partitionId, taskId)
-      }
-    }
-
-    override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val added = messages.collect {
-        case graft.iceberg.GraftFilesCommit(files) => files
-      }.toSeq.flatten
-      val spark = SparkSession.active
-      val branch = branchOpt.getOrElse(SparkIcebergTable.wapBranch(spark))
-      IcebergWriter.overwriteDynamicCommit(spark, table.tableDir, added,
-        committerOpt, branch)
-      ()
-    }
-
-    override def abort(messages: Array[WriterCommitMessage]): Unit = {
-      val fs = new Path(writeDir).getFileSystem(conf)
-      fs.delete(new Path(writeDir), true)
-      ()
-    }
-  }
 }
 
 // ---- merge-on-read (delta) row-level operations ----------------------------
@@ -854,68 +752,41 @@ final class GraftDeltaWrite(
     writeSchema: StructType,
     cmd: RowLevelOperation.Command,
     committerOpt: Option[graft.iceberg.TableCommitter] = None)
-    extends DeltaWrite with RequiresDistributionAndOrdering {
+    extends DeltaWrite with GraftClusteredWrite {
+
+  private val isDelete = cmd == RowLevelOperation.Command.DELETE
 
   /** Cluster delta INSERT rows by the partition transforms (MERGE inserts
     * at scale hit the same task×tuple fanout as appends). A DELETE delta
     * carries only row ids — `writeDistribution` sees the missing source
-    * columns and backs off to unspecified. Best-effort (AQE rebalance). */
+    * columns and backs off to unspecified. */
   override def requiredDistribution()
       : org.apache.spark.sql.connector.distributions.Distribution =
-    if (cmd == RowLevelOperation.Command.DELETE)
+    if (isDelete)
       org.apache.spark.sql.connector.distributions.Distributions.unspecified()
     else SparkIcebergTable.writeDistribution(table, writeSchema)
-  override def requiredOrdering()
-      : Array[org.apache.spark.sql.connector.expressions.SortOrder] = Array.empty
-  override def distributionStrictlyRequired(): Boolean = false
 
   override def toBatch: DeltaBatchWrite = new DeltaBatchWrite {
     private val spark = SparkSession.active
-    // vended per-table storage credentials ride the write data plane
-    private val conf = SparkIcebergTable.withOverrides(
-      spark.sessionState.newHadoopConf(), table.vended)
+    private val target = new GraftWriteTarget(table, "mor")
     private val branch = SparkIcebergTable.wapBranch(spark)
-    private val writeDir =
-      s"${table.tableDir}/data/mor-${java.util.UUID.randomUUID.toString.take(12)}"
 
     override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
       val meta = table.metadata
       // v3 row lineage: an update's REINSERT half materializes the
       // original `_row_id` into the appended file (delta metadata
-      // projection; null for fresh inserts) — same stamped extra column
-      // as the copy-on-write replacement write. DELETEs append no data
+      // projection; null for fresh inserts) — same appended columns as
+      // the copy-on-write replacement write. DELETEs append no data
       // rows, so their id-only schema stays untouched.
-      val lineage = cmd != RowLevelOperation.Command.DELETE &&
-        IcebergWriter.wantsLineage(meta) &&
+      val lineage = !isDelete && IcebergWriter.wantsLineage(meta) &&
         !meta.schema.fieldNames.contains(IcebergTable.RowIdCol)
-      val stamped = RowLevelWriteSchemas.stampedSchema(meta, writeSchema, lineage)
-      // a DELETE appends no data rows (only position-delete files) and
-      // its write schema carries just the row id — there are no partition
-      // source columns to index and nothing for a fanout spec to cluster
-      val spec =
-        if (cmd == RowLevelOperation.Command.DELETE) Nil
-        else RowLevelWriteSchemas.partitionFields(meta, writeSchema)
-      val fmt = graft.iceberg.IcebergWriter.tableWriteFormat(meta)
-      val inner = new graft.iceberg.FanoutWriterFactory(
-        writeDir, stamped,
-        RowLevelWriteSchemas.fieldIds(meta, lineage),
-        spec,
-        new graft.iceberg.SerializableHadoopConf(conf),
-        codec = graft.iceberg.IcebergWriter.tableFormatCodec(meta, fmt),
-        targetFileBytes = graft.iceberg.IcebergWriter.targetFileSize(meta),
-        format = fmt,
-        // a MOR DELETE writes only position-delete files (no data rows
-        // carrying geo/ns values), so the type guards must not refuse it.
-        // The factory's internal schema-marker check cannot fire either:
-        // a DELETE's write schema is the row-id columns (_file/_pos),
-        // which carry no geo/ns field markers — pinned by
-        // MergeOnReadSpec's ORC-geo-table DELETE case.
-        guards =
-          if (cmd == RowLevelOperation.Command.DELETE)
-            graft.iceberg.WriteTypeGuards.none
-          else graft.iceberg.WriteTypeGuards.forTable(meta, fmt))
-      new GraftDeltaWriterFactory(inner, writeDir,
-        new graft.iceberg.SerializableHadoopConf(conf),
+      // a DELETE writes only position-delete files: its write schema is
+      // the row-id columns (_file/_pos), with no partition source to
+      // index and no geo/ns data for the type guards to refuse — pinned
+      // by MergeOnReadSpec's ORC-geo-table DELETE case
+      new GraftDeltaWriterFactory(
+        target.fanout(writeSchema, lineage, deletesOnly = isDelete),
+        target.writeDir, new graft.iceberg.SerializableHadoopConf(target.conf),
         deleteCodec = graft.iceberg.IcebergWriter.deleteCodec(meta),
         lineage = lineage)
     }
@@ -925,14 +796,11 @@ final class GraftDeltaWrite(
       IcebergWriter.commitDelta(spark, table.tableDir,
         deltas.flatMap(_.dataFiles), deltas.flatMap(_.deleteFiles),
         committerOpt, branch,
-        operation =
-          if (cmd == RowLevelOperation.Command.DELETE) "delete" else "overwrite")
+        operation = if (isDelete) "delete" else "overwrite")
     }
 
-    override def abort(messages: Array[WriterCommitMessage]): Unit = {
-      val fs = new Path(writeDir).getFileSystem(conf)
-      fs.delete(new Path(writeDir), true)
-    }
+    override def abort(messages: Array[WriterCommitMessage]): Unit =
+      target.abort()
   }
 }
 
@@ -993,21 +861,13 @@ final class GraftDeltaWriterFactory(
               s"unexpected fanout commit message: $other")
           }
         val delFiles = if (dels.isEmpty) Nil else {
-          val pathMeta = new MetadataBuilder()
-            .putLong("parquet.field.id", IcebergWriter.PosDelPathId).build()
-          val posMeta = new MetadataBuilder()
-            .putLong("parquet.field.id", IcebergWriter.PosDelPosId).build()
-          val delSchema = StructType(Seq(
-            org.apache.spark.sql.types.StructField("file_path",
-              org.apache.spark.sql.types.StringType, nullable = false, pathMeta),
-            org.apache.spark.sql.types.StructField("pos",
-              org.apache.spark.sql.types.LongType, nullable = false, posMeta)))
           val p = new Path(s"$writeDir/del-$partitionId-$taskId-" +
             s"${java.util.UUID.randomUUID.toString.take(8)}.parquet")
           val fs = p.getFileSystem(conf.value)
           val qualified = fs.makeQualified(p)
           val w = org.apache.spark.sql.execution.datasources.parquet
-            .GraftParquetWriteShim.open(qualified.toString, delSchema,
+            .GraftParquetWriteShim.open(qualified.toString,
+              IcebergTable.posDeleteWriteSchema,
               conf.value, deleteCodec)
           try dels.sortInPlace().foreach { case (f, pos) =>
             w.write(new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(

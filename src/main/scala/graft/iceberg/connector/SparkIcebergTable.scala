@@ -127,7 +127,10 @@ final class SparkIcebergTable(tableName: String, val table: IcebergTable,
 
   /** Writes go through the V1 bridge ([[GraftWriteBuilder]]): the commit
     * protocol is driver-side metadata bookkeeping around a distributed
-    * `df.write.parquet`, which `InsertableRelation` expresses exactly.
+    * data-file write from the table's one write setup
+    * ([[graft.iceberg.FanoutWriterFactory.forTable]]), which
+    * `InsertableRelation` expresses exactly; dynamic overwrite and
+    * row-level operations are DSv2 writes over the same setup.
     * Time-travel-pinned tables are read-only (writing "into the past"
     * would fork history). */
   override def capabilities(): JSet[TableCapability] =
@@ -161,18 +164,10 @@ final class SparkIcebergTable(tableName: String, val table: IcebergTable,
     * follows commits staged on the branch (the read half of
     * write-audit-publish: audit a staging stream before publishing). */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val maxFiles = Option(options.get("maxFilesPerTrigger")).map { v =>
-      val n = v.toInt
-      require(n > 0, s"maxFilesPerTrigger must be positive, got $n")
-      n
-    }
+    val maxFiles = ReadOptions.positiveInt(options, "maxFilesPerTrigger")
     // row-weighted admission, the changelog stream's twin: cap each
     // micro-batch at ~N appended ROWS (snapshot-granular, >=1 snapshot)
-    val maxRows = Option(options.get("maxRowsPerTrigger")).map { v =>
-      val n = v.toLong
-      require(n > 0, s"maxRowsPerTrigger must be positive, got $n")
-      n
-    }
+    val maxRows = ReadOptions.positiveLong(options, "maxRowsPerTrigger")
     // `snapshot-id` / `as-of-timestamp`: the DataFrame-reader twins of
     // `VERSION AS OF` / `TIMESTAMP AS OF` (upstream Iceberg's option
     // names). Mutually exclusive with each other and with `branch`.
@@ -185,11 +180,11 @@ final class SparkIcebergTable(tableName: String, val table: IcebergTable,
     // streamRef = "" (un-streamable sentinel): these pins freeze a batch
     // state; a stream has no frontier to follow from them, and the
     // micro-batch planner would otherwise silently walk the LIVE lineage
-    Option(options.get("snapshot-id")).foreach(id =>
-      return new GraftScanBuilder(table.atSnapshot(id.toLong),
+    ReadOptions.long(options, "snapshot-id").foreach(id =>
+      return new GraftScanBuilder(table.atSnapshot(id),
         streamRef = "", maxFilesPerTrigger = maxFiles))
-    Option(options.get("as-of-timestamp")).foreach(ms =>
-      return new GraftScanBuilder(table.asOfTimestamp(ms.toLong),
+    ReadOptions.long(options, "as-of-timestamp").foreach(ms =>
+      return new GraftScanBuilder(table.asOfTimestamp(ms),
         streamRef = "", maxFilesPerTrigger = maxFiles))
     Option(options.get("branch")) match {
       case None => new GraftScanBuilder(table, maxFilesPerTrigger = maxFiles,
@@ -369,8 +364,9 @@ final class GraftWriteBuilder(table: IcebergTable,
   /** Dynamic partition overwrite (`partitionOverwriteMode = dynamic`):
     * replace exactly the partitions the incoming rows land in. Needs a
     * real DSv2 batch write — Spark has no V1 fallback for it — so
-    * [[build]] returns [[GraftDynamicOverwriteWrite]]'s executor-written
-    * fanout files instead of the V1 `InsertableRelation`. */
+    * [[build]] returns [[GraftDataFilesWrite.dynamicOverwrite]]'s
+    * executor-written fanout files instead of the V1
+    * `InsertableRelation`. */
   override def overwriteDynamicPartitions(): WriteBuilder = {
     dynamic = true
     this
@@ -378,7 +374,7 @@ final class GraftWriteBuilder(table: IcebergTable,
 
   override def build(): Write =
     if (dynamic)
-      new GraftDynamicOverwriteWrite(table, committerOpt, branchOpt)
+      GraftDataFilesWrite.dynamicOverwrite(table, committerOpt, branchOpt)
     else new V1Write {
       override def toInsertableRelation: InsertableRelation = new InsertableRelation {
         override def insert(data: DataFrame, overwrite: Boolean): Unit = {

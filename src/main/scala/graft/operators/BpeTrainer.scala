@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.GraftColumnShim
 import graft.functions.catalyst.BpeMergePair
+import graft.iceberg.IcebergTable
 
 /** Distributed byte-pair-encoding vocabulary TRAINING (Sennrich et al.
   * 2016): iteratively fuse the corpus's most frequent adjacent symbol
@@ -86,8 +87,10 @@ object BpeTrainer {
         .filter(col("cnt") >= minCount)
         .orderBy(col("cnt").desc, col("l").asc, col("r").asc)
         .limit(math.max(want * 4, 4)).collect()
-      // this round's collect materialized `words`; its parent is free
-      prevWords.foreach(_.unpersist())
+      // this round's collect materialized `words`; its parent is free.
+      // Dataset.unpersist is a NO-OP on a localCheckpoint'd frame (its
+      // blocks live outside the CacheManager): release the RDD blocks
+      prevWords.foreach(IcebergTable.unpinLocalCheckpoint)
       prevWords = None
       if (top.isEmpty) done = true
       else {
@@ -110,8 +113,8 @@ object BpeTrainer {
         words = next
       }
     }
-    prevWords.foreach(_.unpersist())
-    words.unpersist()
+    prevWords.foreach(IcebergTable.unpinLocalCheckpoint)
+    IcebergTable.unpinLocalCheckpoint(words)
     merges.result()
   }
 

@@ -353,4 +353,28 @@ class ChangelogSpec extends SparkSpec {
     assert(new IcebergTable(s"$ns/d", conf)
       .changesBetween(spark, 0L, lineage(s"$ns/d").last).count() == 3)
   }
+
+  test("a malformed changelog read option refuses with the option's name") {
+    fresh("clopt")
+    spark.sql("CREATE TABLE clopt.ns.t (k INT, v STRING)")
+    spark.sql("INSERT INTO clopt.ns.t VALUES (1, 'a'), (2, 'b')")
+    def msgs(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
+    def refusal(key: String, value: String): String = msgs(intercept[Exception] {
+      spark.read.option(key, value).table("clopt.ns.t.changes").collect()
+    }).mkString(" | ")
+    for ((key, value) <- Seq("maxSnapshotsPerTrigger" -> "1O",
+        "maxRowsPerTrigger" -> "many", "start-snapshot-id" -> "first",
+        "compute-updates" -> "yes", "row-lineage" -> "on")) {
+      val m = refusal(key, value)
+      assert(m.contains(key) && m.contains(s"'$value'"),
+        s"$key=$value: expected the option named, got: $m")
+    }
+    assert(refusal("maxSnapshotsPerTrigger", "-1")
+      .contains("maxSnapshotsPerTrigger must be positive, got -1"))
+    // valid values read as before (boolean options are case-insensitive)
+    assert(spark.read.option("compute-updates", "FALSE")
+      .option("maxSnapshotsPerTrigger", "1")
+      .table("clopt.ns.t.changes").count() == 2L)
+  }
 }

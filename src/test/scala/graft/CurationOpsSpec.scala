@@ -625,6 +625,20 @@ class CurationOpsSpec extends SparkSpec {
       s"got $merges")
   }
 
+  test("BPE training releases every round's checkpoint blocks") {
+    import graft.operators.BpeTrainer
+    val corpus = Seq((1L, "low low low lower lowest")).toDF("doc_id", "text")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val merges = BpeTrainer.train(corpus, "text", numMerges = 10)
+    assert(merges.size == 3)
+    // each round localCheckpoints the symbol table; Dataset.unpersist
+    // does not reach those blocks, so a leak shows up as new ids here
+    // (ids of earlier tests may leave meanwhile: the ContextCleaner runs
+    // asynchronously)
+    val pinned = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(pinned.isEmpty, s"still pinned: ${pinned.toSeq.sorted}")
+  }
+
   test("BPE tokenize applies merges in rank order and respects word boundaries") {
     import graft.operators.BpeTrainer
     val corpus = Seq((1L, "low low low lower lowest")).toDF("doc_id", "text")

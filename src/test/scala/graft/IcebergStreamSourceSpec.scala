@@ -963,4 +963,27 @@ class IcebergStreamSourceSpec extends SparkSpec {
     assert(msgs(e).exists(_.contains("NULL values in key")),
       s"expected the null-key refusal, got: ${msgs(e).mkString(" | ")}")
   }
+
+  test("a malformed read option refuses with the option's name and value") {
+    val dir = createTable("srcopt")
+    IcebergWriter.append(spark, dir, ids(0, 3))
+    def msgs(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
+    def refusal(key: String, value: String): String = msgs(intercept[Exception] {
+      spark.read.option(key, value).table("strcat.ns.srcopt").collect()
+    }).mkString(" | ")
+    for ((key, value) <- Seq("maxFilesPerTrigger" -> "1O",
+        "maxRowsPerTrigger" -> "ten", "snapshot-id" -> "12x",
+        "as-of-timestamp" -> "yesterday")) {
+      val m = refusal(key, value)
+      assert(m.contains(key) && m.contains(s"'$value'"),
+        s"$key=$value: expected the option named, got: $m")
+    }
+    // the positivity checks stay
+    assert(refusal("maxFilesPerTrigger", "0")
+      .contains("maxFilesPerTrigger must be positive, got 0"))
+    // valid values read as before
+    assert(spark.read.option("maxFilesPerTrigger", "1")
+      .table("strcat.ns.srcopt").count() == 3L)
+  }
 }

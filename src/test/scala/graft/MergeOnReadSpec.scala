@@ -385,4 +385,72 @@ class MergeOnReadSpec extends SparkSpec {
     assert(new IcebergTable(dir, conf).hasDeletes,
       "the delete landed as a position-delete file")
   }
+
+  // ---- write parity: what each write entry point puts on disk ----------
+
+  test("write parity: merge-on-read MERGE on a v3 table, updates and inserts") {
+    val ns = fresh("morwp1")
+    spark.sql(
+      """CREATE TABLE morwp1.ns.t (k INT, grp INT, v STRING)
+        |PARTITIONED BY (grp)
+        |TBLPROPERTIES ('write.merge.mode' = 'merge-on-read',
+        |  'format-version' = '3')""".stripMargin)
+    spark.sql("INSERT INTO morwp1.ns.t SELECT CAST(id AS INT), CAST(id % 2 AS INT), " +
+      "'base' FROM range(10)")
+    val dir = s"$ns/t"
+    val before = dataFiles(dir)
+    spark.range(5, 15)
+      .selectExpr("CAST(id AS INT) AS k", "CAST(id % 2 AS INT) AS grp", "'merged' AS v")
+      .createOrReplaceTempView("morwp1_src")
+    spark.sql(
+      """MERGE INTO morwp1.ns.t t USING morwp1_src s ON t.k = s.k
+        |WHEN MATCHED THEN UPDATE SET v = s.v
+        |WHEN NOT MATCHED THEN INSERT (k, grp, v) VALUES (s.k, s.grp, s.v)""".stripMargin)
+    val rows = spark.sql("SELECT k, v FROM morwp1.ns.t").collect()
+      .map(r => r.getInt(0) -> r.getString(1)).toMap
+    assert(rows == (0 until 15).map(k => k -> (if (k < 5) "base" else "merged")).toMap)
+    val t = new IcebergTable(dir, conf)
+    val paths = WriteParity.newDataFiles(t, before).map(f => t.resolve(f.filePath))
+    assert(WriteParity.shapesMatch(paths,
+      "mor-[0-9a-f]{8}-[0-9a-f]{3}/part-\\d+-\\d+-\\d+\\.parquet"), paths.mkString(", "))
+    val got = WriteParity.dataLines(t, before, conf)
+    assert(got == Seq(
+      "ids=k:1:OPTIONAL,grp:2:OPTIONAL,v:3:REQUIRED,_row_id:2147483540:OPTIONAL,_last_updated_sequence_number:2147483539:OPTIONAL codecs=SNAPPY part=grp=0 lower=1/2/3/2147483540 nan= null=1/2/3/2147483539/2147483540 upper=1/2/3/2147483540 value=1/2/3/2147483539/2147483540",
+      "ids=k:1:OPTIONAL,grp:2:OPTIONAL,v:3:REQUIRED,_row_id:2147483540:OPTIONAL,_last_updated_sequence_number:2147483539:OPTIONAL codecs=SNAPPY part=grp=1 lower=1/2/3/2147483540 nan= null=1/2/3/2147483539/2147483540 upper=1/2/3/2147483540 value=1/2/3/2147483539/2147483540"), got.mkString("\n", "\n", ""))
+    val meta = WriteParity.sparkMeta(paths, conf)
+    assert(meta == Set(Seq(
+      "k" -> """{"iceberg.field-id":1,"parquet.field.id":1}""",
+      "grp" -> """{"iceberg.field-id":2,"parquet.field.id":2}""",
+      "v" -> """{"iceberg.field-id":3,"parquet.field.id":3}""",
+      "_row_id" -> """{"parquet.field.id":2147483540}""",
+      "_last_updated_sequence_number" -> """{"parquet.field.id":2147483539}""")), meta.mkString("\n"))
+  }
+
+  test("write parity: merge-on-read DELETE writes position-delete files") {
+    val ns = fresh("morwp2")
+    spark.sql(
+      """CREATE TABLE morwp2.ns.t (k INT, v STRING)
+        |PARTITIONED BY (v)
+        |TBLPROPERTIES ('write.delete.mode' = 'merge-on-read',
+        |  'write.parquet.compression-codec' = 'gzip')""".stripMargin)
+    spark.sql("INSERT INTO morwp2.ns.t SELECT CAST(id AS INT), CONCAT('x', id % 3) FROM range(30)")
+    val dir = s"$ns/t"
+    val before = dataFiles(dir)
+    // `k % 7` has no source-filter form: the delete plans as a row-level
+    // delta write, not a metadata-only deleteWhere
+    spark.sql("DELETE FROM morwp2.ns.t WHERE k % 7 = 3")
+    assert(spark.sql("SELECT COUNT(*) FROM morwp2.ns.t").head.getLong(0) == 26L)
+    val t = new IcebergTable(dir, conf)
+    assert(WriteParity.newDataFiles(t, before).isEmpty, "a DELETE appends no data")
+    val dels = WriteParity.newDeleteFiles(t, Set.empty)
+    assert(WriteParity.shapesMatch(dels,
+      "mor-[0-9a-f]{8}-[0-9a-f]{3}/del-\\d+-\\d+-[0-9a-f]{8}\\.parquet"), dels.mkString(", "))
+    val got = WriteParity.deleteLines(t, Set.empty, conf)
+    assert(got == Seq.fill(3)(
+      "ids=file_path:2147483546:REQUIRED,pos:2147483545:REQUIRED codecs=GZIP"), got.mkString("\n", "\n", ""))
+    val meta = WriteParity.sparkMeta(dels, conf)
+    assert(meta == Set(Seq(
+      "file_path" -> """{"parquet.field.id":2147483546}""",
+      "pos" -> """{"parquet.field.id":2147483545}""")), meta.mkString("\n"))
+  }
 }

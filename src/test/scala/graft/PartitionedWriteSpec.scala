@@ -262,4 +262,69 @@ class PartitionedWriteSpec extends SparkSpec {
     assert(got == Seq(3L, 9L),
       s"day 2024-03-01 replaced, 2024-03-02 kept; got $got")
   }
+
+  // ---- write parity: what each write entry point puts on disk ----------
+
+  test("write parity: DataFrame append on a partitioned table") {
+    useCatalog()
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS pw.ns")
+    spark.sql("DROP TABLE IF EXISTS pw.ns.wpa")
+    spark.sql(
+      """CREATE TABLE pw.ns.wpa (k BIGINT, region STRING, v DOUBLE)
+        |PARTITIONED BY (region, bucket(2, k))""".stripMargin)
+    val dir = s"$warehouse/ns/wpa"
+    val conf = spark.sessionState.newHadoopConf()
+    import spark.implicits._
+    graft.iceberg.IcebergWriter.append(spark, dir,
+      Seq((1L, "eu", 1.0), (2L, "eu", Double.NaN), (3L, "us", 3.0),
+        (4L, null, 4.0)).toDF("k", "region", "v"))
+    val t = IcebergTable(spark, dir)
+    val paths = WriteParity.newDataFiles(t, Set.empty).map(f => t.resolve(f.filePath))
+    assert(WriteParity.shapesMatch(paths, "s\\d+-[0-9a-f]{8}/part-\\d+-\\d+-\\d+\\.parquet"),
+      paths.mkString(", "))
+    val got = WriteParity.dataLines(t, Set.empty, conf)
+    assert(got == Seq(
+      "ids=k:1:REQUIRED,region:2:OPTIONAL,v:3:REQUIRED codecs=SNAPPY part=k_bucket=0,region=eu lower=1/2 nan= null=1/2/3 upper=1/2 value=1/2/3",
+      "ids=k:1:REQUIRED,region:2:OPTIONAL,v:3:REQUIRED codecs=SNAPPY part=k_bucket=0,region=null lower=1 nan= null=1/2/3 upper=1 value=1/2/3",
+      "ids=k:1:REQUIRED,region:2:OPTIONAL,v:3:REQUIRED codecs=SNAPPY part=k_bucket=1,region=us lower=1/2 nan= null=1/2/3 upper=1/2 value=1/2/3"), got.mkString("\n", "\n", ""))
+    val meta = WriteParity.sparkMeta(paths, conf)
+    assert(meta == Set(Seq(
+      "k" -> """{"parquet.field.id":1}""",
+      "region" -> """{"parquet.field.id":2}""",
+      "v" -> """{"parquet.field.id":3}""")), meta.mkString("\n"))
+  }
+
+  test("write parity: dynamic INSERT OVERWRITE on a partitioned table") {
+    useCatalog()
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS pw.ns")
+    spark.sql("DROP TABLE IF EXISTS pw.ns.wpd")
+    spark.sql(
+      """CREATE TABLE pw.ns.wpd (k BIGINT, region STRING, d DATE)
+        |PARTITIONED BY (region, days(d))
+        |TBLPROPERTIES ('write.parquet.compression-codec' = 'gzip')""".stripMargin)
+    spark.sql("INSERT INTO pw.ns.wpd VALUES (1, 'eu', DATE'2024-01-01'), " +
+      "(2, 'us', DATE'2024-01-02')")
+    val dir = s"$warehouse/ns/wpd"
+    val conf = spark.sessionState.newHadoopConf()
+    val before = IcebergTable(spark, dir).planFiles().map(_.filePath).toSet
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    try {
+      spark.sql("INSERT OVERWRITE pw.ns.wpd VALUES (20, 'eu', DATE'2024-01-01'), " +
+        "(21, 'eu', DATE'2024-01-03'), (22, NULL, NULL)")
+    } finally spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    val t = IcebergTable(spark, dir)
+    val paths = WriteParity.newDataFiles(t, before).map(f => t.resolve(f.filePath))
+    assert(WriteParity.shapesMatch(paths,
+      "dow-[0-9a-f]{8}-[0-9a-f]{3}/part-\\d+-\\d+-\\d+\\.parquet"), paths.mkString(", "))
+    val got = WriteParity.dataLines(t, before, conf)
+    assert(got == Seq(
+      "ids=k:1:OPTIONAL,region:2:OPTIONAL,d:3:OPTIONAL codecs=GZIP part=d_day=19723,region=eu lower=1/2/3 nan= null=1/2/3 upper=1/2/3 value=1/2/3",
+      "ids=k:1:OPTIONAL,region:2:OPTIONAL,d:3:OPTIONAL codecs=GZIP part=d_day=19725,region=eu lower=1/2/3 nan= null=1/2/3 upper=1/2/3 value=1/2/3",
+      "ids=k:1:OPTIONAL,region:2:OPTIONAL,d:3:OPTIONAL codecs=GZIP part=d_day=null,region=null lower=1 nan= null=1/2/3 upper=1 value=1/2/3"), got.mkString("\n", "\n", ""))
+    val meta = WriteParity.sparkMeta(paths, conf)
+    assert(meta == Set(Seq(
+      "k" -> """{"iceberg.field-id":1,"parquet.field.id":1}""",
+      "region" -> """{"iceberg.field-id":2,"parquet.field.id":2}""",
+      "d" -> """{"iceberg.field-id":3,"parquet.field.id":3}""")), meta.mkString("\n"))
+  }
 }

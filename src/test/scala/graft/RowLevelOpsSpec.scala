@@ -192,4 +192,63 @@ class RowLevelOpsSpec extends SparkSpec {
     assert(spark.sql("SELECT COUNT(*) FROM rlo7.ns.p WHERE grp = 2")
       .collect()(0).getLong(0) == 10)
   }
+
+  // ---- write parity: what each write entry point puts on disk ----------
+
+  test("write parity: compact on a v3 table materializes the lineage columns") {
+    freshCatalog("rlowp1")
+    spark.sql(
+      """CREATE TABLE rlowp1.ns.t (k BIGINT, grp INT, tag STRING)
+        |PARTITIONED BY (grp)
+        |TBLPROPERTIES ('format-version' = '3')""".stripMargin)
+    spark.sql("INSERT INTO rlowp1.ns.t SELECT id, CAST(id % 2 AS INT), 'a' FROM range(0, 6)")
+    spark.sql("INSERT INTO rlowp1.ns.t SELECT id, CAST(id % 2 AS INT), NULL FROM range(6, 10)")
+    val dir = s"$wh/ns/t"
+    val conf = spark.sessionState.newHadoopConf()
+    graft.iceberg.IcebergWriter.compact(spark, dir)
+    val t = IcebergTable(spark, dir)
+    val paths = WriteParity.newDataFiles(t, Set.empty).map(f => t.resolve(f.filePath))
+    assert(WriteParity.shapesMatch(paths,
+      "s\\d+-[0-9a-f]{8}/part-\\d+-\\d+-\\d+\\.parquet"), paths.mkString(", "))
+    val got = WriteParity.dataLines(t, Set.empty, conf)
+    assert(got == Seq(
+      "ids=k:1:OPTIONAL,grp:2:OPTIONAL,tag:3:OPTIONAL,_row_id:2147483540:OPTIONAL,_last_updated_sequence_number:2147483539:OPTIONAL codecs=SNAPPY part=grp=0 lower=1/2/3 nan= null=1/2/3 upper=1/2/3 value=1/2/3",
+      "ids=k:1:OPTIONAL,grp:2:OPTIONAL,tag:3:OPTIONAL,_row_id:2147483540:OPTIONAL,_last_updated_sequence_number:2147483539:OPTIONAL codecs=SNAPPY part=grp=1 lower=1/2/3 nan= null=1/2/3 upper=1/2/3 value=1/2/3"), got.mkString("\n", "\n", ""))
+    val meta = WriteParity.sparkMeta(paths, conf)
+    assert(meta == Set(Seq(
+      "k" -> """{"iceberg.field-id":1,"parquet.field.id":1}""",
+      "grp" -> """{"iceberg.field-id":2,"parquet.field.id":2}""",
+      "tag" -> """{"iceberg.field-id":3,"parquet.field.id":3}""",
+      "_row_id" -> """{"parquet.field.id":2147483540}""",
+      "_last_updated_sequence_number" -> """{"parquet.field.id":2147483539}""")), meta.mkString("\n"))
+  }
+
+  test("write parity: copy-on-write UPDATE on a v3 table") {
+    freshCatalog("rlowp2")
+    spark.sql(
+      """CREATE TABLE rlowp2.ns.t (k BIGINT, grp INT, tag STRING)
+        |PARTITIONED BY (grp)
+        |TBLPROPERTIES ('format-version' = '3',
+        |  'write.parquet.compression-codec' = 'zstd')""".stripMargin)
+    spark.sql("INSERT INTO rlowp2.ns.t SELECT id, CAST(id % 2 AS INT), 'a' FROM range(0, 10)")
+    val dir = s"$wh/ns/t"
+    val conf = spark.sessionState.newHadoopConf()
+    val before = files("rlowp2", "t")
+    spark.sql("UPDATE rlowp2.ns.t SET tag = 'hit' WHERE k >= 7")
+    val t = IcebergTable(spark, dir)
+    val paths = WriteParity.newDataFiles(t, before).map(f => t.resolve(f.filePath))
+    assert(WriteParity.shapesMatch(paths,
+      "rlo-[0-9a-f]{8}-[0-9a-f]{3}/part-\\d+-\\d+-\\d+\\.parquet"), paths.mkString(", "))
+    val got = WriteParity.dataLines(t, before, conf)
+    assert(got == Seq(
+      "ids=k:1:OPTIONAL,grp:2:OPTIONAL,tag:3:OPTIONAL,_row_id:2147483540:OPTIONAL,_last_updated_sequence_number:2147483539:OPTIONAL codecs=ZSTD part=grp=0 lower=1/2/3/2147483539/2147483540 nan= null=1/2/3/2147483539/2147483540 upper=1/2/3/2147483539/2147483540 value=1/2/3/2147483539/2147483540",
+      "ids=k:1:OPTIONAL,grp:2:OPTIONAL,tag:3:OPTIONAL,_row_id:2147483540:OPTIONAL,_last_updated_sequence_number:2147483539:OPTIONAL codecs=ZSTD part=grp=1 lower=1/2/3/2147483539/2147483540 nan= null=1/2/3/2147483539/2147483540 upper=1/2/3/2147483539/2147483540 value=1/2/3/2147483539/2147483540"), got.mkString("\n", "\n", ""))
+    val meta = WriteParity.sparkMeta(paths, conf)
+    assert(meta == Set(Seq(
+      "k" -> """{"iceberg.field-id":1,"parquet.field.id":1}""",
+      "grp" -> """{"iceberg.field-id":2,"parquet.field.id":2}""",
+      "tag" -> """{"iceberg.field-id":3,"parquet.field.id":3}""",
+      "_row_id" -> """{"parquet.field.id":2147483540}""",
+      "_last_updated_sequence_number" -> """{"parquet.field.id":2147483539}""")), meta.mkString("\n"))
+  }
 }
